@@ -8,7 +8,7 @@ import org.apache.spark.sql.Dataset
   *
   * Default: `localCheckpoint()` — blocks live in EXECUTOR storage
   * memory, truncation is free of any filesystem round-trip, and at
-  * `local[32]` (one JVM) an "executor loss" cannot happen, so this is
+  * `local[N]` (one JVM) an "executor loss" cannot happen, so this is
   * the right local-mode trade.
   *
   * Cluster mode: executor-stored blocks die with the executor AND the
@@ -96,18 +96,57 @@ object Ckpt {
     def stageCkpt(): Dataset[T] = stage(ds)
   }
 
-  /** Stage `ds` while observing its row count on the SAME action —
-    * the fused loop-control pattern (k28/kcore/SCC, extended to the
-    * frontier loops in round 13): the emptiness witness rides the
-    * staging job instead of a separate `isEmpty`/`count` probe job.
-    * Because the count is of the round's OWN staged output, loop
-    * round counts cannot shift (the k9_wcc input-vs-output lesson).
+  /** Stage `ds` while observing its row count on the SAME action, so
+    * a loop's emptiness witness costs no job of its own (see
+    * [[fixpoint]]).
     */
   def stageCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
     import org.apache.spark.sql.functions.{count, lit}
     val obs = org.apache.spark.sql.Observation()
     val staged = stage(ds.observe(obs, count(lit(1)).as("n")))
     (staged, observedLong(obs, "n"))
+  }
+
+  /** The one driver loop every convergent iteration runs on (SCC, WCC,
+    * SSSP, frontier expansion, coreness, k-core, k-truss, dedup
+    * clustering): a sequence of driver-coordinated materializations,
+    * each round staging its state and deciding from it whether to go on.
+    *
+    * `init` is the starting state paired with its own done-witness, so
+    * an input that already satisfies the loop's condition runs zero
+    * rounds. `round(state, i)` computes round `i` (1-based) and returns
+    * the next state with its witness. Converging ON round `maxIter` is
+    * success; needing round `maxIter + 1` throws, naming `loop` and the
+    * bound, so a runaway loop fails loudly instead of returning a
+    * partial answer.
+    *
+    * FUSED WITNESS: a round reads its witness off its OWN staging action
+    * — a row count ([[stageCounted]]) or any other aggregate observed
+    * with `Dataset.observe` and read back by [[observedLong]] — so loop
+    * control adds no probe job per round. The witness must compare the
+    * round's OUTPUT with state already in hand: certifying the round's
+    * input instead re-admits one redundant round (the k9_wcc lesson,
+    * whose structural star-forest probe therefore stays a separate
+    * cheap job). A done-condition that is part of the answer, such as a
+    * hop horizon, belongs in the witness too; `maxIter` is only the
+    * runaway guard.
+    *
+    * The combinator holds no shared state, so independent loops can be
+    * driven concurrently from several threads (k19's three reachability
+    * loops).
+    */
+  def fixpoint[S](loop: String, maxIter: Long)(init: (S, Boolean))(
+      round: (S, Int) => (S, Boolean)): S = {
+    @scala.annotation.tailrec
+    def go(state: S, done: Boolean, i: Int): S =
+      if (done) state
+      else if (i > maxIter) throw new IllegalStateException(
+        s"$loop did not converge within $maxIter rounds")
+      else {
+        val (next, nextDone) = round(state, i)
+        go(next, nextDone, i + 1)
+      }
+    go(init._1, init._2, 1)
   }
 
   /** Read a long metric off a completed `Observation` (the fused

@@ -16,9 +16,10 @@ object PlanDump {
     val outDir = args.headOption.getOrElse("/tmp/plandump")
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

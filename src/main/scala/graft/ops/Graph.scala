@@ -45,98 +45,66 @@ object Graph {
     */
   def scc(spark: SparkSession, vertices: DataFrame, edges0: DataFrame,
           maxOuterIter: Int = 50): DataFrame = {
-    // Round 13: every loop-control count in this function rides its
-    // round's OWN staging action as an observed metric (the k28 /
-    // kcore / ktruss discipline — one job per round instead of two).
-    // Unlike the k9_wcc probe (which was measured and reverted in
-    // r12 because fusing it certified round INPUT and re-admitted a
-    // redundant round), every witness here compares the round's own
-    // output against in-hand state, so round counts cannot shift.
-    val obsR0 = org.apache.spark.sql.Observation()
-    var remaining = vertices.select(col("v").cast("long").as("v"))
-      .distinct()
-      .observe(obsR0, count(lit(1)).as("c")).stageCkpt()
-    var remainingCount = Ckpt.observedLong(obsR0, "c")
-    var edges = edges0
+    val (verts, nVerts) = Ckpt.stageCounted(
+      vertices.select(col("v").cast("long").as("v")).distinct())
+    val distinctEdges = edges0
       .select(col("src").cast("long").as("src"),
               col("dst").cast("long").as("dst"))
       .distinct().stageCkpt()
-    var assigned = remaining.limit(0)
+    val noneAssigned = verts.limit(0)
       .select(col("v"), col("v").as("component"))
-    var outer = 0
+    // each outer round peels >= 1 SCC; every inner loop is bounded by
+    // the vertex count it runs over (a max-id colour or a BFS frontier
+    // travels at most |V| - 1 hops, so round |V| witnesses the end)
+    val (_, _, _, assigned) = Ckpt.fixpoint("SCC outer peel", maxOuterIter)(
+      ((verts, nVerts, distinctEdges, noneAssigned), nVerts == 0)) {
+      case ((remaining, remainingCount, edges, assigned), _) =>
+        // -- 1. color(v) := max id reaching v, to fixpoint; the
+        // changed-row count compares the round's output with the old
+        // colour already in hand from the left join
+        val colors = Ckpt.fixpoint("SCC colour propagation", remainingCount)(
+          (remaining.select(col("v"), col("v").as("color")).stageCkpt(),
+            false)) { (cur, _) =>
+          val inMax = edges.join(cur, edges("src") === cur("v"))
+            .groupBy(col("dst")).agg(max(col("color")).as("in_color"))
+          val obs = org.apache.spark.sql.Observation()
+          val next = cur.join(inMax, cur("v") === inMax("dst"), "left")
+            .select(cur("v"), col("color").as("old"),
+              greatest(col("color"),
+                coalesce(col("in_color"), lit(Long.MinValue))).as("color"))
+            .observe(obs, sum(when(col("color") =!= col("old"), 1L)
+              .otherwise(0L)).as("c"))
+            .select(col("v"), col("color"))
+            .stageCkpt()
+          (next, Ckpt.observedLong(obs, "c") == 0)
+        }
 
-    while (remainingCount > 0 && outer < maxOuterIter) {
-      // -- 1. color(v) := max id reaching v, to fixpoint
-      var colors = remaining.select(col("v"), col("v").as("color"))
-        .stageCkpt()
-      var changed = 1L
-      while (changed > 0) {
-        val inMax = edges.join(colors, edges("src") === colors("v"))
-          .groupBy(col("dst")).agg(max(col("color")).as("in_color"))
-        // the changed-row count is the round's own old-vs-new compare,
-        // and the old color is already in hand from the left join —
-        // observed on the staging pass, the separate compare-join +
-        // count job per fixpoint iteration is gone
-        val obs = org.apache.spark.sql.Observation()
-        val next = colors.join(inMax, colors("v") === inMax("dst"), "left")
-          .select(colors("v"), col("color").as("old"),
-            greatest(col("color"), coalesce(col("in_color"), lit(Long.MinValue)))
-              .as("color"))
-          .observe(obs, sum(when(col("color") =!= col("old"), 1L)
-            .otherwise(0L)).as("c"))
-          .select(col("v"), col("color"))
-          .stageCkpt()
-        changed = Ckpt.observedLong(obs, "c")
-        colors = next
-      }
+        // -- 2. roots + backward BFS along same-color edges
+        val srcCol = colors.withColumnRenamed("v", "src")
+          .withColumnRenamed("color", "src_color")
+        val dstCol = colors.withColumnRenamed("v", "dst")
+          .withColumnRenamed("color", "dst_color")
+        val sameColorEdges = edges.join(srcCol, Seq("src"))
+          .join(dstCol, Seq("dst"))
+          .filter(col("src_color") === col("dst_color"))
+          .select(col("dst").as("src"), col("src").as("dst")).stageCkpt()
+        val roots = Ckpt.stageCounted(colors
+          .filter(col("v") === col("color"))
+          .select(col("color").as("component"), col("v").as("id")))
+        val reached = frontier(sameColorEdges, roots, Seq("component"),
+          maxIter = remainingCount)
+          .select(col("id").as("v"), col("component"))
 
-      // -- 2. roots + backward BFS restricted to same-color edges
-      val srcCol = colors.withColumnRenamed("v", "src")
-        .withColumnRenamed("color", "src_color")
-      val dstCol = colors.withColumnRenamed("v", "dst")
-        .withColumnRenamed("color", "dst_color")
-      val sameColorEdges = edges.join(srcCol, Seq("src"))
-        .join(dstCol, Seq("dst"))
-        .filter(col("src_color") === col("dst_color"))
-        .select(col("src"), col("dst")).stageCkpt()
-      // frontier-based backward BFS: each step expands only from the
-      // NEWLY reached vertices and anti-joins the visited set, instead
-      // of re-shuffling the whole reached set through union().distinct()
-      // every iteration (VERDICT r1 scale note)
-      val obsB0 = org.apache.spark.sql.Observation()
-      var reached = colors.filter(col("v") === col("color"))
-        .select(col("v"), col("color").as("component"))
-        .observe(obsB0, count(lit(1)).as("c")).stageCkpt()
-      var frontier = reached
-      var grew = Ckpt.observedLong(obsB0, "c")
-      while (grew > 0) {
-        val step = sameColorEdges
-          .join(frontier.withColumnRenamed("v", "dst"), Seq("dst"))
-          .select(col("src").as("v"), col("component"))
-          .distinct()
-        val obsF = org.apache.spark.sql.Observation()
-        frontier = step.join(reached, Seq("v"), "left_anti")
-          .observe(obsF, count(lit(1)).as("c")).stageCkpt()
-        grew = Ckpt.observedLong(obsF, "c")
-        if (grew > 0)
-          reached = reached.union(frontier).stageCkpt()
-      }
-
-      // -- 3. peel off the found SCCs
-      assigned = assigned.union(reached)
-      val obsR = org.apache.spark.sql.Observation()
-      remaining = remaining.join(reached, Seq("v"), "left_anti")
-        .observe(obsR, count(lit(1)).as("c")).stageCkpt()
-      remainingCount = Ckpt.observedLong(obsR, "c")
-      edges = edges
-        .join(remaining.withColumnRenamed("v", "src"), Seq("src"))
-        .join(remaining.withColumnRenamed("v", "dst"), Seq("dst"))
-        .select(col("src"), col("dst")).stageCkpt()
-      outer += 1
+        // -- 3. peel off the found SCCs
+        val (left, leftCount) = Ckpt.stageCounted(
+          remaining.join(reached, Seq("v"), "left_anti"))
+        val leftEdges = edges
+          .join(left.withColumnRenamed("v", "src"), Seq("src"))
+          .join(left.withColumnRenamed("v", "dst"), Seq("dst"))
+          .select(col("src"), col("dst")).stageCkpt()
+        ((left, leftCount, leftEdges, assigned.union(reached)),
+          leftCount == 0)
     }
-    // anything left after maxOuterIter: its own singleton (matches the
-    // reference's bounded-iteration behavior; unreachable at fixture scale)
-    assigned = assigned.union(remaining.select(col("v"), col("v").as("component")))
 
     // -- relabel: component := min member id (deterministic)
     val labels = assigned.groupBy(col("component"))
@@ -351,8 +319,8 @@ object Graph {
   private val ktrussK = 3
   private val ktrussRounds = 4
 
-  /** Canonical (a<b, distinct, loop-free) undirected edge list both
-    * truss formulations peel. */
+  /** Canonical (a<b, distinct, loop-free) undirected edge list the
+    * k-truss peel reads. */
   private def ktrussInput(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .filter(col("l_orderkey") =!= col("l_partkey"))
@@ -384,11 +352,11 @@ object Graph {
     }
   }
 
-  /** Shared oracle for BOTH truss formulations (`k25_ktruss` id-
-    * oriented, `k25b_ktruss_degree` degree-oriented): the k-truss is a
-    * unique subgraph, so the two plans must hash-match the same
-    * unrolled SQL — the k4/k4b equivalence-proof pattern. Support
-    * threshold and unroll depth come from [[ktrussK]]/[[ktrussRounds]].
+  /** Shared oracle for `k25_ktruss` and `k25b_ktruss_degree` (both
+    * roll up the same degree-oriented peel): the k-truss is a unique
+    * subgraph, so any correct peel hash-matches the same unrolled SQL.
+    * Support threshold and unroll depth come from
+    * [[ktrussK]]/[[ktrussRounds]].
     */
   private lazy val ktrussOracle: Option[String] = Some {
     val stages = (1 to ktrussRounds).map { i =>
@@ -423,38 +391,48 @@ object Graph {
 
   /** Frontier-expansion BFS over a directed `(src, dst)` edge list:
     * returns `(id, dist)` for every node within `maxIter` hops of
-    * `src`. Each round touches only the new frontier (first discovery
-    * = minimum distance), with lineage checkpointed per round.
+    * `src` — the hop horizon, part of the answer (see [[frontier]]).
     * Exposed for SccSpec's synthetic-graph pins; `k5_bfs` runs it over
     * the capped fixture graph.
     */
   def bfs(s: SparkSession, edges: DataFrame, src: Long,
           maxIter: Int = 10): DataFrame = {
     import s.implicits._
-    // Only each round's FRESH delta is checkpointed; the settled set is
-    // a union of those already-materialized deltas (shallow lineage, no
-    // O(rounds · |V|) re-write). The loop exits as soon as a frontier
-    // comes back empty — its row count rides each round's OWN staging
-    // action as an Observation (r13: the k28/SCC fused-witness pattern;
-    // previously a separate isEmpty probe job per round), so round
-    // counts are unchanged and one driver round-trip per round is gone.
-    var dist = Seq((src, 0)).toDF("id", "dist").stageCkpt()
-    var frontier = dist
-    var fN = 1L // the seed row
-    var i = 1
-    while (i <= maxIter && fN > 0) {
-      val nbrs = frontier
-        .join(edges, frontier("id") === edges("src"))
-        .select(col("dst").as("id")).distinct()
-      val (fresh, n) = Ckpt.stageCounted(
-        nbrs.join(dist, Seq("id"), "left_anti")
-          .withColumn("dist", lit(i)))
-      dist = dist.unionByName(fresh)
-      frontier = fresh
-      fN = n
-      i += 1
+    frontier(edges, Ckpt.stageCounted(Seq(src).toDF("id")),
+      hops = maxIter, maxIter = maxIter)
+  }
+
+  /** First-discovery frontier expansion from `seeds` — `(keys…, id)`
+    * rows, staged and counted by [[Ckpt.stageCounted]] — over a
+    * directed `(src, dst)` edge list. Returns `(keys…, id, dist)`: every
+    * vertex each key's seeds reach within `hops` hops, at its minimum
+    * hop distance (first discovery IS the minimum for unit weights).
+    * The keys let several searches share one frame and one join per
+    * round (k13's `source`, SCC's `component`). Each round joins only
+    * the newly-discovered frontier against the edges and anti-joins the
+    * settled set; only that fresh delta is staged, and the settled set
+    * is a union of already-staged deltas, so no round re-writes it. The
+    * loop ends on the first empty frontier or on round `hops`;
+    * `maxIter` is the runaway guard.
+    */
+  private[graft] def frontier(edges: DataFrame, seeds: (DataFrame, Long),
+                              keys: Seq[String] = Nil,
+                              hops: Int = Int.MaxValue,
+                              maxIter: Long = 100): DataFrame = {
+    val (seedRows, nSeeds) = seeds
+    val start = seedRows.withColumn("dist", lit(0))
+    val ks = keys.map(col)
+    val (reached, _) = Ckpt.fixpoint("frontier expansion", maxIter)(
+      ((start, start), nSeeds == 0 || hops <= 0)) {
+      case ((settled, front), i) =>
+        val nbrs = front.join(edges, front("id") === edges("src"))
+          .select(ks :+ col("dst").as("id"): _*).distinct()
+        val (fresh, n) = Ckpt.stageCounted(
+          nbrs.join(settled, keys :+ "id", "left_anti")
+            .withColumn("dist", lit(i)))
+        ((settled.unionByName(fresh), fresh), n == 0 || i >= hops)
     }
-    dist
+    reached
   }
 
   private def cappedEdges(s: SparkSession, d: String): DataFrame =
@@ -697,11 +675,10 @@ object Graph {
     val verts = edges0.select(col("src").as("v"))
       .unionByName(edges0.select(col("dst").as("v")))
       .distinct()
-    var e = edges0.filter(col("src") =!= col("dst"))
+    val e0 = edges0.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct().stageCkpt()
-    var iter = 0
     // Fixed-point probe: the iteration's limit is a star forest — every
     // leaf `b` hangs off exactly ONE center `a`, and no center is a
     // leaf — whose centers are the component minima (Kiveris Thm 2).
@@ -718,14 +695,8 @@ object Graph {
     // state is NOT a fixed point (small-star would merge the parents),
     // so a centers∩leaves test alone would declare victory early and
     // mislabel. The probe is one map-side-combinable aggregate over
-    // vertex roles — no join, no sort.
-    // Round-12 note: fusing this probe into the next round's m1
-    // aggregate (the k28/kcore observed-metric pattern) was
-    // implemented, measured, and REVERTED — it certifies the round's
-    // INPUT, i.e. it re-admits exactly the redundant final
-    // contraction round (1.5-2.8 s at sf0.1, r11 measurement) that
-    // this output-probe (~0.3 s) exists to avoid. The probe stays a
-    // separate cheap job per round by deliberate trade.
+    // vertex roles — no join, no sort — and stays a separate job per
+    // round by deliberate trade (see [[Ckpt.fixpoint]]).
     def isStarForest(df: DataFrame): Boolean =
       df.select(col("a").as("v"), lit(1L).as("ca"), lit(0L).as("cb"))
         .unionByName(df.select(col("b").as("v"), lit(0L).as("ca"),
@@ -733,8 +704,8 @@ object Graph {
         .groupBy("v").agg(sum("ca").as("ca"), sum("cb").as("cb"))
         .filter(col("cb") > 1 || (col("ca") > 0 && col("cb") > 0))
         .isEmpty
-    var done = isStarForest(e)
-    while (iter < maxIter && !done) {
+    val e = Ckpt.fixpoint("WCC star contraction", maxIter)(
+      (e0, isStarForest(e0))) { (e, _) =>
       // large-star: every neighbor v > u links to u's minimum neighbor
       val sym = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
@@ -758,11 +729,8 @@ object Graph {
         .unionByName(m2.select(col("m").as("a"), col("b")))
         .distinct()
         .stageCkpt()
-      done = isStarForest(ss)
-      e = ss
-      iter += 1
+      (ss, isStarForest(ss))
     }
-    require(done, s"WCC star contraction did not converge within $maxIter rounds")
     val members = e.select(col("b").as("v"), col("a").as("component"))
     verts.join(members, Seq("v"), "left")
       .select(col("v"),
@@ -782,29 +750,20 @@ object Graph {
   def sssp(s: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 40): DataFrame = {
     import s.implicits._
-    var dist = Seq((source, 0L)).toDF("id", "dist").stageCkpt()
-    var frontier = dist
-    var fN = 1L // the seed row; each round's count rides its staging
-    var iter = 0 // action as an Observation (r13 fused-witness pattern)
-    var done = false
-    while (iter < maxIter && !done) {
-      if (fN == 0) done = true
-      else {
-        val cand = frontier.join(edges, frontier("id") === edges("src"))
-          .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
-          .groupBy("id").agg(min(col("nd")).as("nd"))
-        val (improved, n) = Ckpt.stageCounted(
-          cand.join(dist, Seq("id"), "left")
-            .filter(col("dist").isNull || col("nd") < col("dist"))
-            .select(col("id"), col("nd").as("dist")))
-        dist = dist.join(improved, Seq("id"), "left_anti")
-          .unionByName(improved).stageCkpt()
-        frontier = improved
-        fN = n
-      }
-      iter += 1
+    val seed = Seq((source, 0L)).toDF("id", "dist").stageCkpt()
+    val (dist, _) = Ckpt.fixpoint("SSSP relaxation", maxIter)(
+      ((seed, seed), false)) { case ((dist, improvedLast), _) =>
+      val cand = improvedLast
+        .join(edges, improvedLast("id") === edges("src"))
+        .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
+        .groupBy("id").agg(min(col("nd")).as("nd"))
+      val (improved, n) = Ckpt.stageCounted(
+        cand.join(dist, Seq("id"), "left")
+          .filter(col("dist").isNull || col("nd") < col("dist"))
+          .select(col("id"), col("nd").as("dist")))
+      ((dist.join(improved, Seq("id"), "left_anti")
+        .unionByName(improved).stageCkpt(), improved), n == 0)
     }
-    require(done, s"SSSP relaxation did not converge within $maxIter rounds")
     dist
   }
 
@@ -1354,14 +1313,11 @@ object Graph {
     // surviving set is localCheckpoint'ed per round (bounded lineage,
     // one action per round, the kcore loop discipline). Support only
     // shrinks, so |E| unchanged <=> fixpoint. The BOARD plan is the
-    // DEGREE-ORIENTED peel (round-12: the id-oriented `ktrussEdges`
-    // faces 5.42B wedge rows 99.7% keyed on one vertex when the hub's
-    // id sorts mid-range — the `sf1skewmid` fixture kills it >300s
-    // where this form runs 14.5s; the degree orientation bounds every
-    // round's wedge join O(m^1.5) regardless of hub id). The
-    // id-oriented form survives as a KtrussSpec equivalence pin — both
-    // peels hash-match this SAME oracle, which is the proof the
-    // skew-safe plan preserves semantics. The oracle unrolls
+    // DEGREE-ORIENTED peel (round-12: an id-oriented peel faces 5.42B
+    // wedge rows 99.7% keyed on one vertex when the hub's id sorts
+    // mid-range — the `sf1skewmid` fixture kills it >300s where this
+    // form runs 14.5s; the degree orientation bounds every round's
+    // wedge join O(m^1.5) regardless of hub id). The oracle unrolls
     // ktrussRounds MATERIALIZED stages — past the measured fixpoint (2
     // rounds at sf0.01 AND sf0.1; post-fixpoint stages are no-ops). k
     // and the unroll depth are SHARED vals interpolated into both
@@ -1370,8 +1326,8 @@ object Graph {
     Q("k25_ktruss",
       (s, d) => {
         // maxIter = the oracle's unrolled depth: a fixture whose
-        // cascade needs more rounds fails LOUDLY here (require in
-        // the peel) instead of silently diverging from a
+        // cascade needs more rounds fails LOUDLY here (the peel's
+        // fixpoint guard) instead of silently diverging from a
         // too-shallow oracle. The peel itself is session-shared with
         // k25b (plan-identical twins — see cachedTrussEdges).
         cachedTrussEdges(s, d)
@@ -1384,12 +1340,11 @@ object Graph {
 
     // ----- K25b [EXT]: the degree-oriented k-truss twin. Since
     // round-12 k25 itself runs this same peel (the id-oriented form
-    // was the board's one named scale-killer — sf1skewmid kills it
-    // >300s; it survives as a KtrussSpec equivalence pin only), so
-    // k25b is retained as the explicitly-named [EXT] row the survey
-    // declared, plan-identical to k25. Same unique truss, same SHARED
-    // oracle. See ktrussEdgesDegree's note and the sf1skewmid
-    // measurement in PERF.md round-11.
+    // was the board's one named scale-killer — sf1skewmid killed it
+    // >300s), so k25b is retained as the explicitly-named [EXT] row
+    // the survey declared, plan-identical to k25. Same unique truss,
+    // same SHARED oracle. See ktrussEdgesDegree's note and the
+    // sf1skewmid measurement in PERF.md round-11.
     Q("k25b_ktruss_degree",
       (s, d) => {
         cachedTrussEdges(s, d)
@@ -1809,9 +1764,8 @@ object Graph {
     // single frame instead of k separate loops, so the per-round join
     // against the cached edge table is paid once for the whole seed
     // set (the way production scores a seed set's centrality; k5_bfs
-    // is the single-source special case). First discovery = minimum
-    // distance; only each round's fresh delta is checkpointed (the
-    // bfs() lineage rule); the loop exits on the first empty frontier.
+    // is the single-source special case) — [[frontier]] keyed by
+    // `source`, with the oracle's 40-hop horizon.
     // Output stays integral (reach count + distance sum) — the
     // closeness RATIO is a trivial client-side division, and emitting
     // the integers keeps the oracle float-free.
@@ -1821,24 +1775,10 @@ object Graph {
         val srcs = edges.groupBy("src").agg(count(lit(1)).as("dg"))
           .orderBy(desc("dg"), col("src")).limit(5)
           .select(col("src").as("source"))
-        var dist = srcs
-          .select(col("source"), col("source").as("id"), lit(0).as("dist"))
-          .stageCkpt()
-        var frontier = dist
-        var fN = 1L // non-empty seed set; per-round counts ride each
-        var i = 1   // staging action (r13 fused-witness pattern)
-        while (i <= 40 && fN > 0) {
-          val nbrs = frontier.join(edges, frontier("id") === edges("src"))
-            .select(col("source"), col("dst").as("id")).distinct()
-          val (fresh, n) = Ckpt.stageCounted(
-            nbrs.join(dist, Seq("source", "id"), "left_anti")
-              .withColumn("dist", lit(i)))
-          dist = dist.unionByName(fresh)
-          frontier = fresh
-          fN = n
-          i += 1
-        }
-        dist.groupBy("source")
+        frontier(edges, Ckpt.stageCounted(
+            srcs.select(col("source"), col("source").as("id"))),
+          Seq("source"), hops = 40)
+          .groupBy("source")
           .agg(count(lit(1)).as("n_reached"),
             sum(col("dist")).cast("long").as("sum_dist"))
           .orderBy("source")
@@ -2157,10 +2097,8 @@ object Graph {
     // run here over the same crawl-shaped capped graph as k1, composing
     // three primitives the engine already has: the session-cached SCC
     // labeling (k1's loop, computed once), and three seeded
-    // reachability loops (forward / backward / undirected) over the
-    // src-partitioned cached edge tables — per round only the frontier
-    // shuffles, first-discovery semantics, early exit on empty
-    // frontier (the bfs() lineage rules). Classification is four
+    // [[frontier]] reachability loops (forward / backward / undirected)
+    // over the src-partitioned cached edge tables. Classification is four
     // anti-joins with fixed precedence — pure set algebra, no floats
     // anywhere. The oracle recomputes the SCC from the recursive
     // transitive closure and each region from its own seeded recursive
@@ -2181,34 +2119,14 @@ object Graph {
         val top = comp.groupBy("component")
           .agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), col("component")).limit(1)
-        // the core's row count rides its staging action and seeds all
-        // three fixpoints' loop control; each round's frontier count
-        // rides that round's OWN staging (r13 fused-witness pattern —
-        // previously an isEmpty probe job per round per fixpoint, the
-        // board's largest job count: 113 jobs/run)
+        // the core's row count rides its staging action and is the
+        // witness all three reachability loops start from
         val (core, coreN) = Ckpt.stageCounted(comp
           .join(broadcast(top.select("component")), Seq("component"))
           .select(col("id").as("v")))
-        def reach(edges: DataFrame): DataFrame = {
-          var reached = core
-          var frontier = core
-          var fN = coreN
-          var i = 0
-          while (i < 100 && fN > 0) {
-            val nxt = edges
-              .join(frontier.withColumnRenamed("v", "src"), Seq("src"))
-              .select(col("dst").as("v")).distinct()
-            val (fresh, n) = Ckpt.stageCounted(
-              nxt.join(reached, Seq("v"), "left_anti"))
-            frontier = fresh
-            fN = n
-            reached = reached.unionByName(frontier)
-            i += 1
-          }
-          require(fN == 0,
-            s"reachability did not converge within $i rounds")
-          reached
-        }
+        def reach(edges: DataFrame): DataFrame =
+          frontier(edges, (core.select(col("v").as("id")), coreN))
+            .select(col("id").as("v"))
         // the three seeded fixpoints are INDEPENDENT (each reads only
         // its own cached edge table and the checkpointed core), and
         // each round is a driver-coordinated action — run sequentially
@@ -2499,13 +2417,8 @@ object Graph {
         .groupBy("v")
         .agg(max(least(col("nval"), col("cum"))).cast("long").as("val"))
     }
-    // Convergence witness: Σ val, collected as an OBSERVED METRIC on
-    // the very action that stages each round-trip — the per-trip
-    // compare job (broadcast build + |V|-row join + isEmpty scan,
-    // 2 extra jobs per trip) is gone entirely; the eager
-    // localCheckpoint/checkpoint inside stageCkpt runs through
-    // Dataset.withAction, so CollectMetrics fires on the same pass
-    // that materializes the frame. Σ equal ⟺ pointwise equal is
+    // Convergence witness: Σ val, observed on the action that stages
+    // each round-trip ([[Ckpt.fixpoint]]). Σ equal ⟺ pointwise equal is
     // EXACT here, not heuristic: the h-operator is monotone (raising
     // any neighbour value cannot lower a vertex's h-index) and
     // h(deg) ≤ deg pointwise, so by induction the trajectory
@@ -2527,13 +2440,11 @@ object Graph {
         count(lit(1)).as("n")).stageCkpt()
       (staged, Ckpt.observedLong(obs, "s"), Ckpt.observedLong(obs, "n"))
     }
-    var (vals, valSum, nVerts) = stagedWithSums(
+    val (vals0, valSum0, nVerts) = stagedWithSums(
       e.groupBy(col("src").as("v"))
         .agg(count(lit(1)).cast("long").as("val")))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      iter += 1
+    val (vals, _) = Ckpt.fixpoint("coreness", maxIter)(
+      ((vals0, valSum0), false)) { case ((vals, valSum), _) =>
       // One Observation per FUSED INNER STEP: all CollectMetrics nodes
       // fire on the single staging action, so after the trip lands we
       // hold the whole intra-trip sum trajectory. Any two consecutive
@@ -2542,22 +2453,16 @@ object Graph {
       // above — which saves the whole extra confirming round-trip the
       // cross-trip compare needed (trips: ⌈T/steps⌉, not ⌈T/steps⌉+1).
       val obsList = (1 to steps).map(_ => org.apache.spark.sql.Observation())
-      var next = vals
-      for (i <- 1 to steps)
-        next = hStep(next).observe(obsList(i - 1),
-          sum(col("val")).as("s"), count(lit(1)).as("n"))
-      val staged = next.stageCkpt()
+      val staged = obsList.foldLeft(vals)((v, obs) => hStep(v).observe(obs,
+        sum(col("val")).as("s"), count(lit(1)).as("n"))).stageCkpt()
       val sums = valSum +: obsList.map(Ckpt.observedLong(_, "s"))
       val counts = obsList.map(Ckpt.observedLong(_, "n"))
       require(counts.forall(_ == nVerts),
         s"coreness vertex universe changed across hSteps ($nVerts -> " +
           s"${counts.mkString(",")}): input edge frame violates the " +
           "symmetric edge-distinct precondition")
-      done = sums.sliding(2).exists(p => p(0) == p(1))
-      vals = staged
-      valSum = sums.last
+      ((staged, sums.last), sums.sliding(2).exists(p => p(0) == p(1)))
     }
-    require(done, s"coreness did not converge in $maxIter rounds")
     vals
   }
 
@@ -2871,46 +2776,6 @@ object Graph {
     */
   private val kcoreLocalTailEdges = 500000L
 
-  /** Pure-distributed twin for the hybrid-equality spec. */
-  /** k-truss peel over a canonical undirected edge list ("a" < "b",
-    * distinct): iteratively keep only edges closing >= k-2 triangles
-    * within the surviving set, to the fixpoint. Precondition matches
-    * [[triangleCounts]]' input contract (canonical, self-loop-free,
-    * distinct); returns the surviving edge set. See `k25_ktruss` for
-    * the plan-shape and scale discussion. Exposed for KtrussSpec's toy
-    * graphs.
-    */
-  private[graft] def ktrussEdges(und0: DataFrame, k: Int,
-                                 maxIter: Int = 8): DataFrame = {
-    var cur = und0.stageCkpt()
-    var prevN = cur.count()
-    var done = false
-    var i = 0
-    while (i < maxIter && !done) {
-      val wedges = cur
-        .join(cur.select(col("a").as("b"), col("b").as("c")), Seq("b"))
-      val tri = wedges
-        .join(cur.select(col("a"), col("b").as("c")), Seq("a", "c"))
-      val sup = tri.select(explode(array(
-          struct(col("a").as("x"), col("b").as("y")),
-          struct(col("b").as("x"), col("c").as("y")),
-          struct(col("a").as("x"), col("c").as("y")))).as("e"))
-        .select(col("e.x").as("a"), col("e.y").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= k - 2)
-      val nxt = cur.join(sup, Seq("a", "b"), "left_semi")
-        .stageCkpt()
-      val n = nxt.count()
-      // support only shrinks as edges leave, so an unchanged count is
-      // an unchanged set — the fixpoint
-      if (n == prevN) done = true else { cur = nxt; prevN = n }
-      i += 1
-    }
-    require(done, s"k-truss peel did not converge within $maxIter rounds")
-    cur
-  }
-
   /** Per-vertex 4-clique membership counts over an arbitrary directed
     * edge list ("src", "dst") — the degree-oriented DAG enumeration
     * (see `k26_clique4` for the plan-shape discussion): self-loops
@@ -2978,21 +2843,23 @@ object Graph {
       .agg(count(lit(1)).as("n_cliques"))
   }
 
-  /** Degree-oriented k-truss peel — same fixpoint as [[ktrussEdges]],
-    * but each round's triangle enumeration orients every edge from its
-    * lower-(degree, id) endpoint (k4b's orientation), which bounds
-    * wedge fan-out at O(√m) per vertex, O(m^1.5) per round TOTAL
-    * regardless of skew. The id-oriented peel survives a hub only when
-    * the hub's id happens to sort LOW (every hot edge points outward);
-    * a hub with a mid-range id centres ~d²/2 wedges on itself —
-    * PERF.md round-10 conceded sf1skew's flat k25 timing was exactly
-    * that fixture accident. Degrees are recomputed from the SURVIVING
-    * set each round (the peel only shrinks, so fresh degrees only
-    * tighten the bound). Triangles are charged to their 3 edges in
-    * canonical (a<b) id form, so the support count and semi-join run
-    * on the same keys as the id-oriented peel — the k-truss is unique,
-    * and `k25b_ktruss_degree` hash-matches the SHARED oracle (the
-    * k4/k4b equivalence-proof pattern).
+  /** Degree-oriented k-truss peel over a canonical undirected edge
+    * list ("a" < "b", distinct, self-loop-free — [[triangleCounts]]'
+    * input contract): iteratively keep only edges closing >= k-2
+    * triangles within the surviving set, to the fixpoint; returns the
+    * surviving edge set. Each round's triangle enumeration orients
+    * every edge from its lower-(degree, id) endpoint (k4b's
+    * orientation), which bounds wedge fan-out at O(√m) per vertex,
+    * O(m^1.5) per round TOTAL regardless of skew. An id orientation
+    * survives a hub only when the hub's id happens to sort LOW (every
+    * hot edge points outward); a hub with a mid-range id centres ~d²/2
+    * wedges on itself — PERF.md round-10 conceded sf1skew's flat k25
+    * timing was exactly that fixture accident. Degrees are recomputed
+    * from the SURVIVING set each round (the peel only shrinks, so fresh
+    * degrees only tighten the bound). Triangles are charged to their 3
+    * edges in canonical (a<b) id form, so `k25_ktruss` and
+    * `k25b_ktruss_degree` hash-match the SHARED oracle. Exposed for
+    * KtrussSpec's toy graphs.
     */
   private[graft] def ktrussEdgesDegree(und0: DataFrame, k: Int,
                                        maxIter: Int = 8): DataFrame = {
@@ -3001,12 +2868,8 @@ object Graph {
                  db: org.apache.spark.sql.Column,
                  b: org.apache.spark.sql.Column) =>
       da < db || (da === db && a < b)
-    val obs0 = org.apache.spark.sql.Observation()
-    var cur = und0.observe(obs0, count(lit(1)).as("c")).stageCkpt()
-    var prevN = Ckpt.observedLong(obs0, "c")
-    var done = false
-    var i = 0
-    while (i < maxIter && !done) {
+    val (cur, _) = Ckpt.fixpoint("degree-oriented k-truss peel", maxIter)(
+      (Ckpt.stageCounted(und0), false)) { case ((cur, prevN), _) =>
       val deg = cur.select(col("a").as("v"))
         .unionAll(cur.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("dg"))
@@ -3043,18 +2906,12 @@ object Graph {
         .groupBy("a", "b")
         .agg(count(lit(1)).as("sup"))
         .filter(col("sup") >= k - 2)
-      // surviving-edge count observed on the staging action (k28
-      // discipline) instead of a separate count job per round
-      val obs = org.apache.spark.sql.Observation()
-      val nxt = cur.join(sup, Seq("a", "b"), "left_semi")
-        .observe(obs, count(lit(1)).as("c"))
-        .stageCkpt()
-      val n = Ckpt.observedLong(obs, "c")
-      if (n == prevN) done = true else { cur = nxt; prevN = n }
-      i += 1
+      // support only shrinks as edges leave, so an unchanged count is
+      // an unchanged set — the fixpoint
+      val (nxt, n) =
+        Ckpt.stageCounted(cur.join(sup, Seq("a", "b"), "left_semi"))
+      ((nxt, n), n == prevN)
     }
-    require(done,
-      s"degree-oriented k-truss peel did not converge within $maxIter rounds")
     cur
   }
 
@@ -3095,48 +2952,38 @@ object Graph {
                                 k: Int, maxIter: Int = 100,
                                 steps: Int = 3,
                                 localTail: Long = 0L): DataFrame = {
-    var sub = edges0
-    var iter = 0
-    var done = false
-    // ONE action per round: the filtered subgraph's checkpoint.
-    // Termination reads edge counts off the cached checkpoints (a
-    // removed vertex always removes ≥ 1 edge, since every vertex in
-    // `sub` has degree ≥ 1, so |E| unchanged ⇔ no vertex removed).
-    var prevE = sub.count()
-    while (iter < maxIter && !done && prevE > localTail) {
-      // b_t → b_{t+1}: vertices with ≥ k candidate neighbours
-      def bStep(cand: DataFrame): DataFrame =
-        sub.join(cand, Seq("src"), "left_semi")
-          .groupBy(col("dst"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= k)
-          .select(col("dst").as("src"))
-      val cand0 = sub.groupBy("src").agg(count(lit(1)).as("h"))
-        .filter(col("h") >= k).select("src")
-      val members = (1 to steps).foldLeft(cand0)((c, _) => bStep(c))
-      // the surviving-edge count rides the staging action as an
-      // observed metric (round-12, the k28 discipline) — the separate
-      // per-round count job over the staged frame is gone
-      val obs = org.apache.spark.sql.Observation()
-      val sub2 = sub
-        .join(members, Seq("src"), "left_semi")
-        .join(members.withColumnRenamed("src", "dst"), Seq("dst"),
-          "left_semi")
-        .observe(obs, count(lit(1)).as("c"))
-        .stageCkpt()
-      val e2 = Ckpt.observedLong(obs, "c")
-      if (e2 == prevE) done = true
-      else { sub = sub2; prevE = e2 }
-      iter += 1
-    }
-    require(done || prevE <= localTail,
-      s"k-core h-pruned peel did not converge within $maxIter rounds")
-    if (!done) {
+    // ONE action per round: the filtered subgraph's checkpoint, whose
+    // edge count rides it as the witness (a removed vertex always
+    // removes ≥ 1 edge, since every vertex in `sub` has degree ≥ 1, so
+    // |E| unchanged ⇔ no vertex removed). The loop also stops, without
+    // converging, as soon as the surviving subgraph fits the local tail.
+    val e0 = edges0.count()
+    val (sub, nE, converged, rounds) =
+      Ckpt.fixpoint("k-core h-pruned peel", maxIter)(
+        ((edges0, e0, false, 0), e0 <= localTail)) {
+        case ((sub, prevE, _, _), i) =>
+          // b_t → b_{t+1}: vertices with ≥ k candidate neighbours
+          def bStep(cand: DataFrame): DataFrame =
+            sub.join(cand, Seq("src"), "left_semi")
+              .groupBy(col("dst"))
+              .agg(count(lit(1)).as("c"))
+              .filter(col("c") >= k)
+              .select(col("dst").as("src"))
+          val cand0 = sub.groupBy("src").agg(count(lit(1)).as("h"))
+            .filter(col("h") >= k).select("src")
+          val members = (1 to steps).foldLeft(cand0)((c, _) => bStep(c))
+          val (next, e) = Ckpt.stageCounted(sub
+            .join(members, Seq("src"), "left_semi")
+            .join(members.withColumnRenamed("src", "dst"), Seq("dst"),
+              "left_semi"))
+          ((next, e, e == prevE, i), e == prevE || e <= localTail)
+      }
+    if (!converged) {
       // tail fits on the driver: finish with the exact bucket peel
       // (Matula–Beck order is irrelevant to the result — the k-core is
       // the unique maximal subgraph of min-degree ≥ k)
       System.err.println(
-        s"[kcore] $iter distributed rounds, local tail of $prevE edges")
+        s"[kcore] $rounds distributed rounds, local tail of $nE edges")
       val rows = sub.select(col("src").cast("string"),
         col("dst").cast("string")).collect()
       val adj = new java.util.HashMap[String,
@@ -3167,7 +3014,7 @@ object Graph {
       import s.implicits._
       return survivors.sortBy(_._1).toSeq.toDF("vertex", "deg")
     }
-    System.err.println(s"[kcore] h-pruned peel converged in $iter rounds")
+    System.err.println(s"[kcore] h-pruned peel converged in $rounds rounds")
     // survivors carry their in-core degree, whose minimum the
     // termination proof bounds at k. No ordering contract here: the
     // k7 caller sorts AFTER decoding back to string ids, and the

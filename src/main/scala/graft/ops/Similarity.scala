@@ -1106,29 +1106,29 @@ object Similarity {
         val p = minhashPairs(s, d).select("d1", "d2").stageCkpt()
         val edges = p.union(p.select(col("d2").as("d1"), col("d1").as("d2")))
           .toDF("a", "b")
-        var labels = edges.select(col("a").as("node")).distinct()
-          .withColumn("lbl", col("node")).stageCkpt()
-        var changed = 1L
-        while (changed > 0) {
+        // min-label propagation settles within |nodes| - 1 hops, so
+        // round |nodes| witnesses the end at the latest
+        val (labels0, nNodes) = graft.Ckpt.stageCounted(
+          edges.select(col("a").as("node")).distinct()
+            .withColumn("lbl", col("node")))
+        val labels = graft.Ckpt.fixpoint("m_dedup_clusters label propagation",
+          nNodes)((labels0, nNodes == 0)) { (cur, _) =>
           val nbr = edges
-            .join(labels.select(col("node").as("b"), col("lbl").as("nl")),
+            .join(cur.select(col("node").as("b"), col("lbl").as("nl")),
               Seq("b"))
             .groupBy("a").agg(min(col("nl")).as("nmin"))
             .select(col("a").as("node"), col("nmin"))
-          // the changed-row count rides the staging action as an
-          // observed metric (the k28 corenessEdges discipline): the
-          // old label is already in hand from the join, so the
-          // separate per-round compare join + count job is gone
+          // the changed-row count compares the round's output with the
+          // old label already in hand from the join
           val obs = org.apache.spark.sql.Observation()
-          val next = labels.join(nbr, Seq("node"), "left")
+          val next = cur.join(nbr, Seq("node"), "left")
             .select(col("node"), col("lbl").as("old"),
               least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
             .observe(obs, sum(when(col("lbl") < col("old"), 1L)
               .otherwise(0L)).as("chg"))
             .select(col("node"), col("lbl"))
             .stageCkpt()
-          changed = graft.Ckpt.observedLong(obs, "chg")
-          labels = next
+          (next, graft.Ckpt.observedLong(obs, "chg") == 0)
         }
         labels.groupBy(col("lbl"))
           .agg(count(lit(1)).as("n_members"),

@@ -84,4 +84,15 @@ class GraphHybridSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
   }
+
+  test("wcc past its round bound fails loudly, naming the loop") {
+    val s = spark
+    import s.implicits._
+    // a 32-vertex path needs several contraction rounds, not one
+    val path = (0L until 32L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val e = intercept[IllegalStateException](
+      Graph.wcc(s, path.toDF("src", "dst"), maxIter = 1).collect())
+    assert(e.getMessage.contains("WCC star contraction"), e.getMessage)
+    assert(e.getMessage.contains("within 1 rounds"), e.getMessage)
+  }
 }

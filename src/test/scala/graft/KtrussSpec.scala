@@ -18,10 +18,6 @@ class KtrussSpec extends SparkSpec {
   }
 
   private def run(k: Int, pairs: (Int, Int)*): Set[(Int, Int)] =
-    graft.ops.Graph.ktrussEdges(edges(pairs: _*), k)
-      .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-
-  private def runDeg(k: Int, pairs: (Int, Int)*): Set[(Int, Int)] =
     graft.ops.Graph.ktrussEdgesDegree(edges(pairs: _*), k)
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
 
@@ -46,21 +42,27 @@ class KtrussSpec extends SparkSpec {
     assert(run(4, (k4 ++ Seq((4, 5), (5, 6))): _*) == k4.toSet)
   }
 
-  test("degree-oriented peel equals the id-oriented peel on every toy") {
-    // the truss is unique, so the two orientations must agree exactly —
-    // including through the k=4 cascade and on a MID-ID hub (vertex 50
-    // below has max degree but neither min nor max id, the case where
-    // id orientation centres all wedges on the hub)
-    for (k <- 3 to 4) {
-      assert(runDeg(k, twoTri: _*) == run(k, twoTri: _*), s"twoTri k=$k")
-      val k4 = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
-      val g = k4 ++ Seq((4, 5), (5, 6))
-      assert(runDeg(k, g: _*) == run(k, g: _*), s"K4+tail k=$k")
-      val hub = (1 to 30).map(i => (50, i)) ++
-        Seq((1, 2), (2, 3), (3, 4), (60, 61)) ++
-        Seq((50, 60), (50, 61))
-      assert(runDeg(k, hub: _*) == run(k, hub: _*), s"mid-id hub k=$k")
-    }
+  test("explicit trusses on twoTri, K4+tail and a mid-id hub") {
+    // every toy at k = 3 and k = 4, through the k=4 cascade and on a
+    // MID-ID hub (vertex 50 below has max degree but neither min nor
+    // max id, the case where id orientation centres all wedges on the
+    // hub)
+    assert(run(3, twoTri: _*) ==
+      Set((1, 2), (1, 3), (2, 3), (2, 4), (3, 4)), "twoTri k=3")
+    assert(run(4, twoTri: _*) == Set.empty, "twoTri k=4")
+    val k4 = Seq((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
+    val g = k4 ++ Seq((4, 5), (5, 6))
+    assert(run(3, g: _*) == k4.toSet, "K4+tail k=3")
+    assert(run(4, g: _*) == k4.toSet, "K4+tail k=4")
+    // triangles 50-1-2, 50-2-3, 50-3-4 and 50-60-61; at k=4 only
+    // (2,50) and (3,50) carry support 2, and alone they close nothing
+    val hub = (1 to 30).map(i => (50, i)) ++
+      Seq((1, 2), (2, 3), (3, 4), (60, 61)) ++
+      Seq((50, 60), (50, 61))
+    assert(run(3, hub: _*) == Set((1, 2), (2, 3), (3, 4), (1, 50),
+      (2, 50), (3, 50), (4, 50), (50, 60), (50, 61), (60, 61)),
+      "mid-id hub k=3")
+    assert(run(4, hub: _*) == Set.empty, "mid-id hub k=4")
   }
 
   test("fixture query emits per-vertex truss degrees") {

@@ -88,4 +88,44 @@ class SccSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 3))
   }
+
+  test("keyed frontier: two sources in one frame equal per-source BFS") {
+    import spark.implicits._
+    // the BFS toy graph above; source 3 reaches the path back through
+    // the cycle edge 3→0, so the two searches overlap on every vertex
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
+      (9L, 10L)).toDF("src", "dst")
+    val seeds = Seq((0L, 0L), (3L, 3L)).toDF("source", "id")
+    val keyed = ops.Graph.frontier(edges, Ckpt.stageCounted(seeds),
+        Seq("source"), hops = 10, maxIter = 10)
+      .collect().groupBy(_.getLong(0))
+      .map { case (src, rows) =>
+        src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap }
+    for (src <- Seq(0L, 3L)) {
+      val single = ops.Graph.bfs(spark, edges, src)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(keyed(src) == single, s"source $src")
+    }
+    assert(keyed(3L) == Map(3L -> 0, 0L -> 1, 1L -> 2, 2L -> 2))
+  }
+
+  /** 0 →(2) 1 →(3) 2: two productive relaxation rounds, then one
+    * round that improves nothing. */
+  private def weightedChain() = {
+    import spark.implicits._
+    Seq((0L, 1L, 2L), (1L, 2L, 3L)).toDF("src", "dst", "w")
+  }
+
+  test("SSSP converging on round maxIter returns the distances") {
+    val got = ops.Graph.sssp(spark, weightedChain(), 0L, maxIter = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(0L -> 0L, 1L -> 2L, 2L -> 5L))
+  }
+
+  test("SSSP one round short of its bound fails loudly, naming the loop") {
+    val e = intercept[IllegalStateException](
+      ops.Graph.sssp(spark, weightedChain(), 0L, maxIter = 2).collect())
+    assert(e.getMessage.contains("SSSP relaxation"), e.getMessage)
+    assert(e.getMessage.contains("within 2 rounds"), e.getMessage)
+  }
 }
