@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Batch formatted-plan dumper for the duplicated-subtree sweep
@@ -14,20 +13,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.headOption.getOrElse("/tmp/plandump")
-    val only: Set[String] =
-      if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.localSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    names.foreach { name =>
+    Harness.selected(args.lift(1)).foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val txt = df.queryExecution

@@ -1,19 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields",
-        sys.env.getOrElse("SPARK_GRAFT_MAXFIELDS", "100"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.localSession()
     // Driver round-trip audit: count Spark jobs per run. Job counts
     // are deterministic (unlike this host's timings), so they expose
     // latency-bound queries — many small jobs at 8c/32c ratio ≈ 1 —

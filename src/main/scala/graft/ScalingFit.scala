@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Fitted per-query scaling exponents across the three measured scales
   * (sf0.01, sf0.1, sf1) — the generated replacement for PERF.md's
@@ -35,37 +34,14 @@ object ScalingFit {
       ("/root/repo/scaledata/sf10", 10.0))
     val scales = scales0 ++ extra.filter { case (dir, _) =>
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    VersionPin.assertCompat(spark)
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (args.nonEmpty && args(0).nonEmpty) {
-        val wanted = args(0).split(",").toSet
-        val unknown = wanted -- names0
-        require(unknown.isEmpty,
-          s"unknown query name(s): ${unknown.mkString(", ")}")
-        names0.filter(wanted)
-      } else names0
+    val spark = Harness.localSession()
+    val names = Harness.selected(args.headOption)
 
     val times = scales.map { case (dir, sf) =>
       // same warmup as Bench: base tables + one-time landings charge
       // here, not to whichever query runs first at each scale
-      try {
-        Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings")
-          .foreach(t => Tables.table(spark, dir, t).count())
-        Tables.events(spark, dir).count()
-        Tables.videos(spark, dir).count()
-        Tables.videoEdges(spark, dir).count()
-        ops.Ingest.warmTree(spark, dir)
-      } catch { case e: Throwable =>
+      try Harness.warmTables(spark, dir)
+      catch { case e: Throwable =>
         System.err.println(s"[scalingfit] warmup($dir) failed: " +
           e.getMessage)
       }

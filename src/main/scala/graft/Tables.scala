@@ -89,27 +89,31 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Per-SESSION cache maps, keyed on the session object itself —
+  /** Per-SESSION memo maps, keyed on the session object itself —
     * SparkSession doesn't override equals, so lookup is reference
-    * identity and two live sessions can never collide (the previous
-    * identityHashCode key could). Entries are evicted when the session's
-    * SparkContext ends: the persisted data dies with the context, so the
-    * references must too (previous scheme never evicted — a leak across
-    * many sessions in one JVM, e.g. a long test run).
+    * identity and two live sessions can never collide. Entries are
+    * evicted when the session's SparkContext ends: the persisted data
+    * dies with the context, so the references must too (otherwise a
+    * long JVM cycling sessions, e.g. a test run, would leak them).
     * `newSession()` siblings share a context and evict together.
     */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, Cell]]()
 
-  /** The per-session key→DataFrame map (shared with [[graft.ops.Graph]]'s
-    * SCC-label cache), created on first use + eviction listener installed.
-    */
-  private[graft] def sessionScoped(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] = {
+  /** One memo entry: the first caller to read `value` runs `build`;
+    * every other reader blocks on the cell until it has run. */
+  private final class Cell(build: => AnyRef) {
+    lazy val value: scala.util.Try[AnyRef] = scala.util.Try(build)
+  }
+
+  /** The per-session key→entry map, created on first use + eviction
+    * listener installed. */
+  private def sessionScoped(spark: SparkSession)
+      : java.util.concurrent.ConcurrentHashMap[String, Cell] = {
     val existing = cache.get(spark)
     if (existing != null) existing
     else {
-      val m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+      val m = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
       val prev = cache.putIfAbsent(spark, m)
       if (prev != null) prev
       else {
@@ -124,12 +128,55 @@ object Tables {
     }
   }
 
-  /** Serializes [[landedDirWith]] builds: the delete+overwrite of a
-    * landing is DESTRUCTIVE, so two first-callers racing on the same
-    * location (parallel test execution) must not both run it — unlike
-    * the harmless duplicate *cached DataFrame* builds that get/
-    * putIfAbsent tolerates elsewhere. One coarse lock is fine: landings
-    * are rare, build-once events. */
+  /** The session memo: the one place a result is kept for reuse within
+    * a SparkSession — base tables, the SCC labeling k1/k2 share, the
+    * loop-invariant edge tables, evidence buckets, landing and
+    * round-trip markers, corpus counts. Contract:
+    *
+    *   - a hit is a map read plus a lazy-val read: no lock;
+    *   - `build` runs at most once per (session, key): racing first
+    *     callers meet one [[Cell]] through `putIfAbsent` and wait on
+    *     it, so no duplicate is ever built (and none needs releasing —
+    *     a duplicate streaming build or localCheckpoint could not be);
+    *   - builds nest: a build may `memo` other keys (`videos` →
+    *     `table`). Each key waits on its own cell, so only a cycle of
+    *     keys is forbidden — unlike `computeIfAbsent`, which throws
+    *     "Recursive update" on any nested call into the same map;
+    *   - a build that throws leaves no entry: every caller waiting on
+    *     it sees the same failure, and the next call rebuilds;
+    *   - what is materialized is the build's choice ([[cached]]
+    *     persists; markers and counts store a plain value).
+    *
+    * Entries live until the session's SparkContext ends or [[evict]].
+    */
+  private[graft] def memo[T <: AnyRef](spark: SparkSession, key: String)(
+      build: => T): T = {
+    val m = sessionScoped(spark)
+    val cell = m.get(key) match {
+      case null =>
+        val fresh = new Cell(build)
+        m.putIfAbsent(key, fresh) match { case null => fresh; case won => won }
+      case hit => hit
+    }
+    try cell.value.get.asInstanceOf[T]
+    catch { case e: Throwable => m.remove(key, cell); throw e }
+  }
+
+  /** Drop a memo entry so the next call rebuilds; a persisted frame is
+    * unpersisted. */
+  private[graft] def evict(spark: SparkSession, key: String): Unit =
+    Option(sessionScoped(spark).remove(key)).foreach(_.value.foreach {
+      case df: org.apache.spark.sql.Dataset[_] => df.unpersist()
+      case _ =>
+    })
+
+  /** Serializes [[landedDirWith]] builds across sessions: the
+    * delete+overwrite of a landing is DESTRUCTIVE, and every session on
+    * the warehouse shares its location, so two sessions racing on it
+    * must not both run it ([[memo]] only serializes within one
+    * session). One coarse lock is fine: landings are rare, build-once
+    * events. A landing's build memos other keys while holding it, so
+    * no memo build that lands may be one a landing build needs. */
   private val landLock = new Object
 
   /** Fingerprint of the code that builds landed artifacts: the
@@ -198,13 +245,13 @@ object Tables {
     * the manifest and triggers a rebuild. The manifest is written
     * AFTER a successful build, so an interrupted build leaves no
     * marker and the next caller rebuilds. In-session callers hit the
-    * session map and never re-fingerprint. Cross-PROCESS builds are
+    * [[memo]] and never re-fingerprint. Cross-PROCESS builds are
     * additionally guarded by a best-effort `.build_lock` directory
     * (atomic mkdirs): a second process waits for the winner's
     * manifest instead of double-building; a crashed winner's stale
     * lock is broken after a bounded wait. StorageSpec pins
     * reuse-across-newSession and the stale-base negative control. */
-  /** One convention for every landed name: session-map key and landing
+  /** One convention for every landed name: memo key and landing
     * location derived together (shared with [[invalidateLanding]] —
     * the two MUST stay byte-identical or invalidation goes stale).
     * Mangling matches Storage.sfx ("/root/testdata/sf0.01" ->
@@ -226,10 +273,9 @@ object Tables {
 
   private[graft] def landedDirWith(spark: SparkSession, name: String,
       dir: String)(write: String => Unit): String = {
-    val m = sessionScoped(spark)
     val (key, loc) = landingKeyLoc(spark, name, dir)
-    if (m.get(key) == null) landLock.synchronized {
-      if (m.get(key) == null) {
+    memo(spark, key) {
+      landLock.synchronized {
         val p = new org.apache.hadoop.fs.Path(loc)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val marker = new org.apache.hadoop.fs.Path(p, manifestFile)
@@ -438,10 +484,9 @@ object Tables {
             }
           }
         }
-        m.putIfAbsent(key, spark.emptyDataFrame)
       }
+      loc
     }
-    loc
   }
 
   /** Drop a landing's manifest (and its session fast-path entry) so
@@ -453,7 +498,7 @@ object Tables {
   private[graft] def invalidateLanding(spark: SparkSession, name: String,
       dir: String): Unit = {
     val (key, loc) = landingKeyLoc(spark, name, dir)
-    sessionScoped(spark).remove(key)
+    evict(spark, key)
     val marker = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(loc), manifestFile)
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -467,23 +512,10 @@ object Tables {
     landedDirWith(spark, name, dir)(
       loc => build.write.mode("overwrite").parquet(loc))
 
-  /** get/putIfAbsent, NOT computeIfAbsent: builders nest (videos() calls
-    * table() on the same map) and a nested computeIfAbsent on one
-    * ConcurrentHashMap throws "Recursive update". A racing duplicate
-    * build is unpersisted and discarded.
-    */
+  /** [[memo]] of a persisted frame under `key|dir`. */
   private[graft] def cached(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val m = sessionScoped(spark)
-    val k = s"$key|$dir"
-    val existing = m.get(k)
-    if (existing != null) existing
-    else {
-      val df = build.persist()
-      val prev = m.putIfAbsent(k, df)
-      if (prev != null) { df.unpersist(); prev } else df
-    }
-  }
+      build: => DataFrame): DataFrame =
+    memo(spark, s"$key|$dir")(build.persist())
 
   /** Flat videos table. Columns:
     * id, uploader, age_days, category, length, rating, views, num_ratings,

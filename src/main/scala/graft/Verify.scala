@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
     // SPARK_GRAFT_VERIFY_EXCLUDE: comma-separated names to SKIP — the
     // sf1 board artifact's documented exclusion list rides this
     // (tools/correctness_sf.py --exclude), so one slow fixture-landing
@@ -16,24 +12,15 @@ object Verify {
     val excluded: Set[String] = sys.env.get("SPARK_GRAFT_VERIFY_EXCLUDE")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    VersionPin.assertCompat(spark)
+    val spark = Harness.localSession()
     new java.io.File(outDir).mkdirs()
-    // repartition(1), not coalesce(1): coalesce folds the WHOLE plan into
-    // one task; repartition adds a shuffle barrier so computation stays
-    // parallel and only the final write is single-file.
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .filterNot { case (n, _) => excluded.contains(n) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
+    // optional 3rd arg: comma-separated query-name filter (local
+    // iteration). repartition(1), not coalesce(1): coalesce folds the
+    // WHOLE plan into one task; repartition adds a shuffle barrier so
+    // computation stays parallel and only the final write is single-file.
+    Harness.selected(args.lift(2)).filterNot(excluded).foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).repartition(1)
+        .write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -23,9 +23,10 @@ import org.apache.spark.sql.SparkSession
   *   - AQE/codegen plan shapes that the *_native expression twins and
   *     PlanProbe assertions key on.
   *
-  * Every entrypoint (Verify, Bench, ScalingFit, RecoveryDrill, the
-  * test suite) asserts the pin at session start so a version drift
-  * fails in one obvious place instead of hash-diverging mid-board.
+  * Every entrypoint (the harness mains via [[Harness.localSession]],
+  * RecoveryDrill, the test suite) asserts the pin at session start so
+  * a version drift fails in one obvious place instead of
+  * hash-diverging mid-board.
   * `SPARK_GRAFT_ALLOW_VERSION_DRIFT=1` downgrades the failure to a
   * stderr warning for deliberate porting work.
   */

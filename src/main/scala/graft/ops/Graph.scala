@@ -116,21 +116,11 @@ object Graph {
   /** The k1/k2 queries share one SCC run per (session, sfDir): the loop
     * is driver-coordinated (many jobs), so recomputing it per query
     * would double the most expensive part of the graph surface. The
-    * final labeling is persisted in the session-scoped cache (identity-
-    * keyed, evicted at context end — see [[Tables.sessionScoped]]); the
-    * loop's intermediates are already localCheckpointed.
+    * final labeling is persisted in the session memo; the loop's
+    * intermediates are already localCheckpointed.
     */
-  private def cappedScc(s: SparkSession, d: String): DataFrame = {
-    val m = Tables.sessionScoped(s)
-    val k = s"scc|$d"
-    val existing = m.get(k)
-    if (existing != null) existing
-    else {
-      val df = scc(s, cappedVerts(s, d), cappedEdges(s, d)).persist()
-      val prev = m.putIfAbsent(k, df)
-      if (prev != null) { df.unpersist(); prev } else df
-    }
-  }
+  private def cappedScc(s: SparkSession, d: String): DataFrame =
+    Tables.cached(s, d, "scc")(scc(s, cappedVerts(s, d), cappedEdges(s, d)))
 
   /** Capped video graph: vertices = orderkeys < 2000, edges within.
     * Cap 2000 (raised from 500 per VERDICT r2/r3): the denser low-key
@@ -151,17 +141,8 @@ object Graph {
     * k7/k8 loops each dropped one full-edge-set exchange per round.
     */
   private def cachedBySrc(s: SparkSession, d: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val m = Tables.sessionScoped(s)
-    val k = s"$key|$d"
-    val existing = m.get(k)
-    if (existing != null) existing
-    else {
-      val df = build.repartition(col("src")).persist()
-      val prev = m.putIfAbsent(k, df)
-      if (prev != null) { df.unpersist(); prev } else df
-    }
-  }
+      build: => DataFrame): DataFrame =
+    Tables.cached(s, d, key)(build.repartition(col("src")))
 
   /** Symmetrized full video graph (k7 k-core, k8 LPA). */
   private[graft] def symEdgesBySrc(s: SparkSession, d: String): DataFrame =
@@ -339,18 +320,9 @@ object Graph {
     * saved per bench pass at sf0.1, result hash unchanged by
     * construction).
     */
-  private def cachedTrussEdges(s: SparkSession, d: String): DataFrame = {
-    val m = Tables.sessionScoped(s)
-    val k = s"trussDegree|$d"
-    val existing = m.get(k)
-    if (existing != null) existing
-    else {
-      val df = ktrussEdgesDegree(ktrussInput(s, d), k = ktrussK,
-        maxIter = ktrussRounds).persist()
-      val prev = m.putIfAbsent(k, df)
-      if (prev != null) { df.unpersist(); prev } else df
-    }
-  }
+  private def cachedTrussEdges(s: SparkSession, d: String): DataFrame =
+    Tables.cached(s, d, "trussDegree")(ktrussEdgesDegree(ktrussInput(s, d),
+      k = ktrussK, maxIter = ktrussRounds))
 
   /** Shared oracle for `k25_ktruss` and `k25b_ktruss_degree` (both
     * roll up the same degree-oriented peel): the k-truss is a unique
@@ -2560,15 +2532,9 @@ object Graph {
           .as("modularity"))
   }
 
-  /** Unrouted k16 twin + pure-plan accessor (ArtifactRewriteSpec). */
+  /** Unrouted k16 twin (ArtifactRewriteSpec). */
   private[graft] def k16Unrouted(s: SparkSession, d: String): DataFrame =
     modularityOf(s, d, lpaLabels(s, d, rounds = 4))
-  private[graft] def lpaPlanPureForTest(s: SparkSession, d: String,
-                                        rounds: Int): DataFrame =
-    lpaPlanPure(s, d, rounds)
-  private[graft] def lpaLabelsForTest(s: SparkSession, d: String,
-                                      rounds: Int): DataFrame =
-    lpaLabels(s, d, rounds)
 
   /** The LPA derivation as a PURE plan tree — identical semantics to
     * [[lpaLabels]] but without the per-round localCheckpoint, so the
@@ -2579,8 +2545,8 @@ object Graph {
     * re-running the loop. Never executed directly (executing it would
     * pay the uncheckpointed lineage); [[lpaLabels]] remains the
     * execution path that BUILDS the artifact. */
-  private def lpaPlanPure(s: SparkSession, d: String,
-                          rounds: Int): DataFrame = {
+  private[graft] def lpaPlanPure(s: SparkSession, d: String,
+                                 rounds: Int): DataFrame = {
     val e = symEdgesBySrc(s, d)
     var lbl = e.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v"))
@@ -2604,39 +2570,15 @@ object Graph {
   /** Install ArtifactRewrite and register the pure 4-round LPA plan
     * against the landed label table for `d`. Shared by k16_modularity
     * (which disarms after building its own plan) and the spec's
-    * controls. */
-  /** Candidate registrations cached per (session, dir): building them
-    * optimizes 8 copies of the 4-round derivation plan, which costs
-    * whole seconds per call if repeated (the round-7 sf0.1 bench
-    * measured k16's median doubling from re-optimization alone —
-    * landing was already cached, the PLANS were not). The cache is a
-    * small synchronized LRU (entries hold plan trees that reference
-    * their session, so listener- or weak-key-based eviction can't
-    * work — plan→session back-references defeat weak keys, and a
-    * per-session listener on the SHARED context bus would itself pin
-    * dead sessions under newSession() churn); a hard size bound keeps
-    * the worst case at a handful of plan trees regardless of churn. */
-  private val lpaArtCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        (SparkSession, String), Seq[graft.plans.ArtifactRewrite.ArtDef]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (SparkSession, String),
-          Seq[graft.plans.ArtifactRewrite.ArtDef]]): Boolean = size > 8
-    })
-
+    * controls. The candidate registrations are memoized per (session,
+    * dir): building them optimizes 8 copies of the 4-round derivation
+    * plan, which costs whole seconds per call if repeated (the round-7
+    * sf0.1 bench measured k16's median doubling from re-optimization
+    * alone — landing was already cached, the PLANS were not). */
   private[graft] def armLpaArtifact(s: SparkSession, d: String): Unit = {
     graft.plans.ArtifactRewrite.install(s)
-    graft.plans.ArtifactRewrite.register(s, lpaArtCache.synchronized {
-      val k = (s, d)
-      val existing = lpaArtCache.get(k)
-      if (existing != null) existing
-      else {
-        val built = buildLpaCandidates(s, d)
-        lpaArtCache.put(k, built)
-        built
-      }
-    })
+    graft.plans.ArtifactRewrite.register(s,
+      Tables.memo(s, s"lpaArt|$d")(buildLpaCandidates(s, d)))
   }
 
   private def buildLpaCandidates(s: SparkSession, d: String)
@@ -2666,8 +2608,8 @@ object Graph {
   /** Per-vertex LPA labels ("v", "lbl") after `rounds` synchronous
     * rounds — the shared core of k8_lpa's rollup and k16_modularity's
     * quality score. */
-  private def lpaLabels(s: SparkSession, d: String,
-                        rounds: Int): DataFrame = {
+  private[graft] def lpaLabels(s: SparkSession, d: String,
+                               rounds: Int): DataFrame = {
     // e is loop-invariant: src-partitioned + persisted (see
     // [[cachedBySrc]]). Each round joins the label table on e's
     // PARTITIONED side (labels shuffle, edges don't) and counts
@@ -2915,13 +2857,9 @@ object Graph {
     cur
   }
 
-  private[graft] def kcoreForTest(s: SparkSession, d: String, k: Int,
-                                  localTail: Long): DataFrame =
-    kcore(s, d, k, localTail = localTail)
-
-  private def kcore(s: SparkSession, d: String, k: Int,
-                    maxIter: Int = 100, steps: Int = 3,
-                    localTail: Long = kcoreLocalTailEdges): DataFrame = {
+  private[graft] def kcore(s: SparkSession, d: String, k: Int,
+      maxIter: Int = 100, steps: Int = 3,
+      localTail: Long = kcoreLocalTailEdges): DataFrame = {
     // round 13: the peel runs on the int-encoded edge twin (guide
     // §2.3 — every per-round semi-join/count shuffles 8-byte longs,
     // not 'v###' strings) and survivors decode back to the declared

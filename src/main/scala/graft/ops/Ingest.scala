@@ -191,9 +191,7 @@ object Ingest {
   private def roundTrip(s: SparkSession, d: String, fmt: String): DataFrame = {
     val sfx = d.replaceAll("[^A-Za-z0-9]", "_").replaceAll("^_+|_+$", "")
     val path = s"/tmp/graft_rt_${fmt}_$sfx"
-    val m = Tables.sessionScoped(s)
-    val key = s"rt:$fmt:$path"
-    if (m.get(key) == null) {
+    Tables.memo(s, s"rt:$fmt:$path") {
       val slice = Tables.lineitem(s, d).filter(col("l_orderkey") % 10 === 0)
       fmt match {
         case "orc" => slice.write.mode("overwrite").orc(path)
@@ -208,7 +206,7 @@ object Ingest {
           .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
           .format("xml").save(path)
       }
-      m.putIfAbsent(key, s.emptyDataFrame) // presence marker only
+      path
     }
     fmt match {
       case "orc" => s.read.orc(path)
@@ -274,8 +272,7 @@ object Ingest {
     * uncached — ad-hoc trees (tests) must see fresh listings. */
   private def a3Scanned(s: SparkSession, d: String): DataFrame = {
     val root = tsvTreeRoot(s, d)
-    Tables.sessionScoped(s)
-      .computeIfAbsent(s"a3scan:$root", _ => scanTree(s, root))
+    Tables.memo(s, s"a3scan:$root")(scanTree(s, root))
   }
 
   /** Land a REAL on-disk TSV tree once per (session, fixture):

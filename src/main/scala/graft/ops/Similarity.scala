@@ -2782,35 +2782,19 @@ object Similarity {
        |), $stages""".stripMargin
   }
 
-  /** Embedding-corpus row count, cached per (session, dir) so deriving
-    * the data-dependent k (m_semdedup) stays action-free on repeat plan
-    * constructions — the count is one tiny metadata-ish scan, but
-    * paying it on EVERY verify/bench repetition is a job per build
-    * (round-8 ADVICE). Session-keyed like Tables.sessionScoped, so a
-    * new session (or a changed dir) re-counts. */
-  private val corpusSizeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
-  private def cachedCount(s: SparkSession, key: String,
-      count: => Long): Long =
-    corpusSizeCache.computeIfAbsent((s, key), { _ =>
-      // evict with the session's context (same discipline as
-      // Tables.sessionScoped) — keys strongly retain the SparkSession,
-      // so a long-lived JVM cycling sessions must not pin them forever
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit =
-            corpusSizeCache.keySet.removeIf(_._1 eq s)
-        })
-      java.lang.Long.valueOf(count)
-    }).longValue()
+  /** Embedding-corpus row count, memoized per (session, dir) so
+    * deriving the data-dependent k (m_semdedup) stays action-free on
+    * repeat plan constructions — the count is one tiny metadata-ish
+    * scan, but paying it on EVERY verify/bench repetition is a job per
+    * build (round-8 ADVICE). A new session (or a changed dir)
+    * re-counts. */
   private def corpusSize(s: SparkSession, d: String): Long =
-    cachedCount(s, s"emb:$d", quantized(s, d).count())
-  /** Document-corpus row count, cached like [[corpusSize]] — derives
+    Tables.memo(s, s"emb:$d")(Long.box(quantized(s, d).count())).longValue
+  /** Document-corpus row count, memoized like [[corpusSize]] — derives
     * the data-dependent audit-panel stride in m_dedup_recall. */
   private def docsSize(s: SparkSession, d: String): Long =
-    cachedCount(s, s"docs:$d", Tables.documents(s, d).count())
+    Tables.memo(s, s"docs:$d")(
+      Long.box(Tables.documents(s, d).count())).longValue
 
   /** vec_id + floor-quantized (1e3) integer coordinates — the exact
     * arithmetic domain shared by m_kmeans/m_semdedup. */

@@ -61,7 +61,7 @@ class ArtifactRewriteSpec extends SparkSpec {
     ops.Graph.armLpaArtifact(spark, sf)
     try {
       // 3 rounds instead of the registered 4 — sameResult must reject
-      val p3 = ops.Graph.lpaPlanPureForTest(spark, sf, rounds = 3)
+      val p3 = ops.Graph.lpaPlanPure(spark, sf, rounds = 3)
         .queryExecution.optimizedPlan.toString
       assert(!p3.contains("graft_lpa_labels"),
         s"a 3-round LPA plan was wrongly routed to the 4-round artifact:\n$p3")

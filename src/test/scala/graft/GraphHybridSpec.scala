@@ -19,9 +19,9 @@ class GraphHybridSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("k-core hybrid equals the pure-distributed peel at sf0.001") {
-    val dist = Graph.kcoreForTest(spark, sf, k = 7, localTail = 0L)
+    val dist = Graph.kcore(spark, sf, k = 7, localTail = 0L)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-    val local = Graph.kcoreForTest(spark, sf, k = 7,
+    val local = Graph.kcore(spark, sf, k = 7,
         localTail = Long.MaxValue)
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted
     assert(dist.nonEmpty, "k-core is empty — the pin is vacuous")

@@ -30,12 +30,9 @@ class ReliableCkptSpec extends SparkSpec {
     val wccBase = run("k9_wcc")
     assert(sccBase.nonEmpty && wccBase.nonEmpty)
 
-    // evict the session-cached SCC labeling so the reliable run
-    // recomputes the loop instead of replaying the cached frame;
-    // unpersist the evicted frame — remove() alone would leak its
-    // persisted blocks in the shared session for the rest of the JVM
-    Option(Tables.sessionScoped(spark).remove(s"scc|$sf"))
-      .foreach(_.unpersist())
+    // evict the memoized SCC labeling so the reliable run recomputes
+    // the loop instead of replaying the cached frame
+    Tables.evict(spark, s"scc|$sf")
 
     val dir = java.nio.file.Files.createTempDirectory("graft_rckpt")
       .toFile
@@ -56,8 +53,7 @@ class ReliableCkptSpec extends SparkSpec {
       // is safe from cross-suite interference because the build runs
       // forked tests sequentially (build.sbt pins
       // `Test / testForkedParallel := false`).
-      Option(Tables.sessionScoped(spark).remove(s"scc|$sf"))
-        .foreach(_.unpersist())
+      Tables.evict(spark, s"scc|$sf")
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(): Unit

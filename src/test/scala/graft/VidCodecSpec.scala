@@ -93,9 +93,9 @@ class VidCodecSpec extends SparkSpec {
     // lpaPlanPure is the UNCHANGED string-keyed derivation (the k16
     // artifact fingerprint); the int-mapped checkpointed loop must
     // reproduce its labels exactly — tie-breaks included
-    val want = Graph.lpaPlanPureForTest(spark, sf, rounds = 4)
+    val want = Graph.lpaPlanPure(spark, sf, rounds = 4)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val got = Graph.lpaLabelsForTest(spark, sf, rounds = 4)
+    val got = Graph.lpaLabels(spark, sf, rounds = 4)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got.nonEmpty, "LPA labels empty — the pin is vacuous")
     assert(got == want,
