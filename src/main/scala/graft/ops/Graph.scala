@@ -88,7 +88,7 @@ object Graph {
           .join(dstCol, Seq("dst"))
           .filter(col("src_color") === col("dst_color"))
           .select(col("dst").as("src"), col("src").as("dst")).stageCkpt()
-        val roots = Ckpt.stageCounted(colors
+        val roots = Ckpt.stageDelta(colors
           .filter(col("v") === col("color"))
           .select(col("color").as("component"), col("v").as("id")))
         val reached = frontier(sameColorEdges, roots, Seq("component"),
@@ -106,10 +106,13 @@ object Graph {
           leftCount == 0)
     }
 
-    // -- relabel: component := min member id (deterministic)
+    // -- relabel: component := min member id (deterministic). The
+    // found sets are unions of driver-local deltas of very uneven size;
+    // hashing them by vertex gives the cached labeling even partitions
+    // (a range sort over the uneven ones re-samples: one job more)
     val labels = assigned.groupBy(col("component"))
       .agg(min(col("v")).as("label"))
-    assigned.join(labels, Seq("component"))
+    assigned.repartition(col("v")).join(labels, Seq("component"))
       .select(col("v").as("id"), col("label").as("component"))
   }
 
@@ -117,7 +120,8 @@ object Graph {
     * is driver-coordinated (many jobs), so recomputing it per query
     * would double the most expensive part of the graph surface. The
     * final labeling is persisted in the session memo; the loop's
-    * intermediates are already localCheckpointed.
+    * intermediates are already staged (checkpointed, or driver-local
+    * frontier deltas).
     */
   private def cappedScc(s: SparkSession, d: String): DataFrame =
     Tables.cached(s, d, "scc")(scc(s, cappedVerts(s, d), cappedEdges(s, d)))
@@ -370,21 +374,24 @@ object Graph {
   def bfs(s: SparkSession, edges: DataFrame, src: Long,
           maxIter: Int = 10): DataFrame = {
     import s.implicits._
-    frontier(edges, Ckpt.stageCounted(Seq(src).toDF("id")),
+    frontier(edges, (Seq(src).toDF("id"), 1L),
       hops = maxIter, maxIter = maxIter)
   }
 
   /** First-discovery frontier expansion from `seeds` — `(keys…, id)`
-    * rows, staged and counted by [[Ckpt.stageCounted]] — over a
-    * directed `(src, dst)` edge list. Returns `(keys…, id, dist)`: every
-    * vertex each key's seeds reach within `hops` hops, at its minimum
-    * hop distance (first discovery IS the minimum for unit weights).
+    * rows with their exact count, either driver-local (a `Seq.toDF`, or
+    * [[Ckpt.stageDelta]]) or staged — over a directed `(src, dst)` edge
+    * list. Returns `(keys…, id, dist)`: every vertex each key's seeds
+    * reach within `hops` hops, at its minimum hop distance (first
+    * discovery IS the minimum for unit weights).
     * The keys let several searches share one frame and one join per
     * round (k13's `source`, SCC's `component`). Each round joins only
     * the newly-discovered frontier against the edges and anti-joins the
-    * settled set; only that fresh delta is staged, and the settled set
-    * is a union of already-staged deltas, so no round re-writes it. The
-    * loop ends on the first empty frontier or on round `hops`;
+    * settled set; only that fresh delta is staged, by
+    * [[Ckpt.stageDelta]] — collected to the driver while it fits under
+    * the broadcast threshold, checkpointed past it — and the settled
+    * set is a union of already-staged deltas, so no round re-writes it.
+    * The loop ends on the first empty frontier or on round `hops`;
     * `maxIter` is the runaway guard.
     */
   private[graft] def frontier(edges: DataFrame, seeds: (DataFrame, Long),
@@ -399,7 +406,7 @@ object Graph {
       case ((settled, front), i) =>
         val nbrs = front.join(edges, front("id") === edges("src"))
           .select(ks :+ col("dst").as("id"): _*).distinct()
-        val (fresh, n) = Ckpt.stageCounted(
+        val (fresh, n) = Ckpt.stageDelta(
           nbrs.join(settled, keys :+ "id", "left_anti")
             .withColumn("dist", lit(i)))
         ((settled.unionByName(fresh), fresh), n == 0 || i >= hops)
@@ -717,24 +724,28 @@ object Graph {
     * rounds, 13 at sf0.01. Dijkstra's priority queue does not
     * distribute; frontier Bellman-Ford is the standard Spark/Pregel
     * form (delta-stepping reduces rounds further but needs bucketed
-    * priorities — unnecessary at these depths). Returns ("id", "dist").
+    * priorities — unnecessary at these depths). Each round stages the
+    * improved delta and the updated distance map with
+    * [[Ckpt.stageDelta]]: driver-local while they fit under the
+    * broadcast threshold, checkpointed past it. Returns ("id", "dist").
     */
   def sssp(s: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 40): DataFrame = {
     import s.implicits._
-    val seed = Seq((source, 0L)).toDF("id", "dist").stageCkpt()
+    val seed = Seq((source, 0L)).toDF("id", "dist")
     val (dist, _) = Ckpt.fixpoint("SSSP relaxation", maxIter)(
       ((seed, seed), false)) { case ((dist, improvedLast), _) =>
       val cand = improvedLast
         .join(edges, improvedLast("id") === edges("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
         .groupBy("id").agg(min(col("nd")).as("nd"))
-      val (improved, n) = Ckpt.stageCounted(
+      val (improved, n) = Ckpt.stageDelta(
         cand.join(dist, Seq("id"), "left")
           .filter(col("dist").isNull || col("nd") < col("dist"))
           .select(col("id"), col("nd").as("dist")))
-      ((dist.join(improved, Seq("id"), "left_anti")
-        .unionByName(improved).stageCkpt(), improved), n == 0)
+      val (next, _) = Ckpt.stageDelta(
+        dist.join(improved, Seq("id"), "left_anti").unionByName(improved))
+      ((next, improved), n == 0)
     }
     dist
   }
@@ -1163,8 +1174,9 @@ object Graph {
     // because the graph is capped; BFS is the form that scales —
     // Pregel's canonical example). First discovery IS the minimum
     // distance, so no per-node min is ever recomputed. Ten rounds max
-    // (the reference's maxIter, graph_filter.py:129), lineage
-    // checkpointed per round; the source is the minimum src id,
+    // (the reference's maxIter, graph_filter.py:129), each round's
+    // delta staged by Ckpt.stageDelta (driver-local while small); the
+    // source is the minimum src id,
     // derived from the data (1-row control-plane aggregate, the SCC
     // loop's pattern). Oracle: recursive CTE whose UNION dedups
     // (id, dist) pairs per level, then min per node.
@@ -1747,7 +1759,7 @@ object Graph {
         val srcs = edges.groupBy("src").agg(count(lit(1)).as("dg"))
           .orderBy(desc("dg"), col("src")).limit(5)
           .select(col("src").as("source"))
-        frontier(edges, Ckpt.stageCounted(
+        frontier(edges, Ckpt.stageDelta(
             srcs.select(col("source"), col("source").as("id"))),
           Seq("source"), hops = 40)
           .groupBy("source")
@@ -2093,14 +2105,14 @@ object Graph {
           .orderBy(desc("n"), col("component")).limit(1)
         // the core's row count rides its staging action and is the
         // witness all three reachability loops start from
-        val (core, coreN) = Ckpt.stageCounted(comp
+        val (core, coreN) = Ckpt.stageDelta(comp
           .join(broadcast(top.select("component")), Seq("component"))
           .select(col("id").as("v")))
         def reach(edges: DataFrame): DataFrame =
           frontier(edges, (core.select(col("v").as("id")), coreN))
             .select(col("id").as("v"))
         // the three seeded fixpoints are INDEPENDENT (each reads only
-        // its own cached edge table and the checkpointed core), and
+        // its own cached edge table and the staged core), and
         // each round is a driver-coordinated action — run sequentially
         // the cluster idles through 3× the per-round latency tail, so
         // drive them as concurrent jobs (Spark's scheduler interleaves

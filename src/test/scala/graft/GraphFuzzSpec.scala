@@ -170,6 +170,38 @@ class GraphFuzzSpec extends SparkSpec {
     }.toMap
   }
 
+  /** Unit-weight distances from `src` within `hops` hops. */
+  private def bruteBfs(edges: Seq[(Long, Long)], src: Long,
+                       hops: Int): Map[Long, Int] = {
+    val out = edges.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    var dist = Map(src -> 0)
+    var front = Seq(src)
+    var d = 0
+    while (front.nonEmpty && d < hops) {
+      d += 1
+      front = front.flatMap(out.getOrElse(_, Nil)).distinct
+        .filterNot(dist.contains)
+      dist ++= front.map(_ -> d)
+    }
+    dist
+  }
+
+  /** Bellman-Ford distances from `src` over positive weights. */
+  private def bruteSssp(edges: Seq[(Long, Long, Long)],
+                        src: Long): Map[Long, Long] = {
+    var dist = Map(src -> 0L)
+    var changed = true
+    while (changed) {
+      changed = false
+      for ((a, b, w) <- edges; da <- dist.get(a)
+           if dist.get(b).forall(da + w < _)) {
+        dist += b -> (da + w)
+        changed = true
+      }
+    }
+    dist
+  }
+
   // ---- Spark-side runners --------------------------------------------
 
   private def edgeDf(edges: Seq[(Long, Long)]) = {
@@ -208,6 +240,43 @@ class GraphFuzzSpec extends SparkSpec {
       val got = Graph.scc(s, v, edgeDf(edges)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == bruteScc(n, edges), c)
+    }
+  }
+
+  test("fuzz: BFS, keyed frontier and SSSP match brute-force distances " +
+    "on both staging paths") {
+    // every third SCC-family index: each graph runs six loops
+    for (i <- indicesFor(0) if i % 3 == 0) {
+      val seed = baseSeed + 9000 + i // disjoint graphs from the SCC run
+      val (n, edges) = gen(seed, maxN = 16)
+      val c = ctx("frontier", i, seed, n, edges.size)
+      val s = spark
+      import s.implicits._
+      val e = edgeDf(edges)
+      val bfs = onBothStagingPaths(Graph.bfs(s, e, 0L).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap)
+      assert(bfs == bruteBfs(edges, 0L, 10), s"$c bfs")
+
+      val srcs = Seq(0L, n / 2L)
+      val keyed = onBothStagingPaths(Graph.frontier(e,
+          (srcs.map(v => (v, v)).toDF("source", "id"), srcs.size.toLong),
+          Seq("source"), hops = 10, maxIter = 10)
+        .collect().groupBy(_.getLong(0))
+        .map { case (src, rows) =>
+          src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap })
+      for (src <- srcs)
+        assert(keyed(src) == bruteBfs(edges, src, 10), s"$c source $src")
+
+      val weighted = edges.map { case (a, b) =>
+        (a, b, 1L + (a * 31 + b * 17 + seed) % 5) }
+      val w = if (weighted.isEmpty) Seq((-1L, -1L, 1L))
+          .toDF("src", "dst", "w").limit(0)
+        else weighted.toDF("src", "dst", "w")
+      // a shortest path has at most n - 1 edges, so round n improves
+      // nothing
+      val sssp = onBothStagingPaths(Graph.sssp(s, w, 0L, maxIter = n)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(sssp == bruteSssp(weighted, 0L), s"$c sssp")
     }
   }
 
