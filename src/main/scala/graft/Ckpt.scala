@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** The lineage-truncation point for every iterative loop (SCC, WCC,
   * k-core, k-truss, LPA, PageRank, FPS, incremental dedup, BPE rounds,
-  * …). One kind of state is not truncated here: a frontier or SSSP
-  * delta small enough to broadcast is collected to the driver instead
-  * ([[stageDelta]]), so it has no lineage left to truncate and never
-  * reaches [[stage]] or the reliable knob below.
+  * …). One kind of state is not truncated here: the frontier and SSSP
+  * loops collect their deltas to the driver instead ([[stageOnDriver]]),
+  * so those have no lineage left to truncate and never reach [[stage]]
+  * or the reliable knob below.
   *
   * Default: `localCheckpoint()` — blocks live in EXECUTOR storage
   * memory, truncation is free of any filesystem round-trip, and at
@@ -111,29 +111,19 @@ object Ckpt {
     (staged, observedLong(obs, "n"))
   }
 
-  /** Stage a loop delta on the DRIVER when it is small: collect at most
-    * `cap + 1` rows, `cap` being how many rows of `ds`'s schema fit
-    * under the session's `spark.sql.autoBroadcastJoinThreshold`. If at
-    * most `cap` come back they become a `LocalRelation` with the exact
-    * row count as the witness: no checkpoint and no `Observation`, and
-    * later rounds read the rows from the driver, where Spark's planner
-    * would collect a join side this small anyway, instead of from
-    * executor blocks. A larger delta, or a threshold <= 0, falls back
-    * to [[stageCounted]], which recomputes `ds`; Spark's own broadcast
-    * threshold is the one knob.
+  /** Stage a loop delta on the DRIVER: collect `ds` and return it as a
+    * `LocalRelation` with the collected row count as the witness — no
+    * checkpoint and no `Observation`, and later rounds read the rows
+    * from the driver instead of from executor blocks (Spark's planner
+    * would collect a join side this small to broadcast it anyway).
+    * There is no size check: every row stays on the driver for as long
+    * as the caller holds the frame, so call it only where the rows are
+    * bounded by a small input (the graph surface's capped vertex set).
     */
-  def stageDelta(ds: DataFrame): (DataFrame, Long) = {
-    val spark = ds.sparkSession
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val cap = if (threshold <= 0) 0L
-      else math.min(threshold / ds.schema.defaultSize, Int.MaxValue - 1L)
-    if (cap <= 0) stageCounted(ds)
-    else {
-      val rows = ds.limit(cap.toInt + 1).collect()
-      if (rows.length > cap) stageCounted(ds)
-      else (spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        ds.schema), rows.length.toLong)
-    }
+  def stageOnDriver(ds: DataFrame): (DataFrame, Long) = {
+    val rows = ds.collect()
+    (ds.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      ds.schema), rows.length.toLong)
   }
 
   /** The one driver loop every convergent iteration runs on (SCC, WCC,
@@ -150,10 +140,10 @@ object Ckpt {
     * partial answer.
     *
     * FUSED WITNESS: a round reads its witness off its OWN staging action
-    * — a row count ([[stageCounted]]; on [[stageDelta]]'s driver-local
-    * path, the number of rows collected) or any other aggregate
-    * observed with `Dataset.observe` and read back by [[observedLong]]
-    * — so loop control adds no probe job per round. The witness must compare the
+    * — a row count ([[stageCounted]]; for [[stageOnDriver]], the
+    * number of rows collected) or any other aggregate observed with
+    * `Dataset.observe` and read back by [[observedLong]] — so loop
+    * control adds no probe job per round. The witness must compare the
     * round's OUTPUT with state already in hand: certifying the round's
     * input instead re-admits one redundant round (the k9_wcc lesson,
     * whose structural star-forest probe therefore stays a separate

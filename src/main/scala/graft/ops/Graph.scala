@@ -88,7 +88,7 @@ object Graph {
           .join(dstCol, Seq("dst"))
           .filter(col("src_color") === col("dst_color"))
           .select(col("dst").as("src"), col("src").as("dst")).stageCkpt()
-        val roots = Ckpt.stageDelta(colors
+        val roots = Ckpt.stageOnDriver(colors
           .filter(col("v") === col("color"))
           .select(col("color").as("component"), col("v").as("id")))
         val reached = frontier(sameColorEdges, roots, Seq("component"),
@@ -120,7 +120,7 @@ object Graph {
     * is driver-coordinated (many jobs), so recomputing it per query
     * would double the most expensive part of the graph surface. The
     * final labeling is persisted in the session memo; the loop's
-    * intermediates are already staged (checkpointed, or driver-local
+    * intermediates are already staged (checkpointed, or collected
     * frontier deltas).
     */
   private def cappedScc(s: SparkSession, d: String): DataFrame =
@@ -379,20 +379,20 @@ object Graph {
   }
 
   /** First-discovery frontier expansion from `seeds` — `(keys…, id)`
-    * rows with their exact count, either driver-local (a `Seq.toDF`, or
-    * [[Ckpt.stageDelta]]) or staged — over a directed `(src, dst)` edge
-    * list. Returns `(keys…, id, dist)`: every vertex each key's seeds
+    * rows with their exact count, driver-local (a `Seq.toDF`, or
+    * [[Ckpt.stageOnDriver]]) or staged — over a directed `(src, dst)`
+    * edge list. Returns `(keys…, id, dist)`: every vertex each key's seeds
     * reach within `hops` hops, at its minimum hop distance (first
     * discovery IS the minimum for unit weights).
     * The keys let several searches share one frame and one join per
     * round (k13's `source`, SCC's `component`). Each round joins only
     * the newly-discovered frontier against the edges and anti-joins the
-    * settled set; only that fresh delta is staged, by
-    * [[Ckpt.stageDelta]] — collected to the driver while it fits under
-    * the broadcast threshold, checkpointed past it — and the settled
-    * set is a union of already-staged deltas, so no round re-writes it.
-    * The loop ends on the first empty frontier or on round `hops`;
-    * `maxIter` is the runaway guard.
+    * settled set; only that fresh delta is staged, collected to the
+    * driver by [[Ckpt.stageOnDriver]], and the settled set is a union of
+    * already-collected deltas, so no round re-writes it. Every vertex
+    * reached is held on the driver until the result is dropped: callers
+    * run it on the capped graph. The loop ends on the first empty
+    * frontier or on round `hops`; `maxIter` is the runaway guard.
     */
   private[graft] def frontier(edges: DataFrame, seeds: (DataFrame, Long),
                               keys: Seq[String] = Nil,
@@ -406,7 +406,7 @@ object Graph {
       case ((settled, front), i) =>
         val nbrs = front.join(edges, front("id") === edges("src"))
           .select(ks :+ col("dst").as("id"): _*).distinct()
-        val (fresh, n) = Ckpt.stageDelta(
+        val (fresh, n) = Ckpt.stageOnDriver(
           nbrs.join(settled, keys :+ "id", "left_anti")
             .withColumn("dist", lit(i)))
         ((settled.unionByName(fresh), fresh), n == 0 || i >= hops)
@@ -724,10 +724,10 @@ object Graph {
     * rounds, 13 at sf0.01. Dijkstra's priority queue does not
     * distribute; frontier Bellman-Ford is the standard Spark/Pregel
     * form (delta-stepping reduces rounds further but needs bucketed
-    * priorities — unnecessary at these depths). Each round stages the
-    * improved delta and the updated distance map with
-    * [[Ckpt.stageDelta]]: driver-local while they fit under the
-    * broadcast threshold, checkpointed past it. Returns ("id", "dist").
+    * priorities — unnecessary at these depths). Each round collects the
+    * improved delta and the updated distance map to the driver with
+    * [[Ckpt.stageOnDriver]], so the map of every reached vertex lives
+    * there: callers run it on the capped graph. Returns ("id", "dist").
     */
   def sssp(s: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 40): DataFrame = {
@@ -739,11 +739,11 @@ object Graph {
         .join(edges, improvedLast("id") === edges("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
         .groupBy("id").agg(min(col("nd")).as("nd"))
-      val (improved, n) = Ckpt.stageDelta(
+      val (improved, n) = Ckpt.stageOnDriver(
         cand.join(dist, Seq("id"), "left")
           .filter(col("dist").isNull || col("nd") < col("dist"))
           .select(col("id"), col("nd").as("dist")))
-      val (next, _) = Ckpt.stageDelta(
+      val (next, _) = Ckpt.stageOnDriver(
         dist.join(improved, Seq("id"), "left_anti").unionByName(improved))
       ((next, improved), n == 0)
     }
@@ -1175,7 +1175,7 @@ object Graph {
     // Pregel's canonical example). First discovery IS the minimum
     // distance, so no per-node min is ever recomputed. Ten rounds max
     // (the reference's maxIter, graph_filter.py:129), each round's
-    // delta staged by Ckpt.stageDelta (driver-local while small); the
+    // delta collected to the driver by Ckpt.stageOnDriver; the
     // source is the minimum src id,
     // derived from the data (1-row control-plane aggregate, the SCC
     // loop's pattern). Oracle: recursive CTE whose UNION dedups
@@ -1759,7 +1759,7 @@ object Graph {
         val srcs = edges.groupBy("src").agg(count(lit(1)).as("dg"))
           .orderBy(desc("dg"), col("src")).limit(5)
           .select(col("src").as("source"))
-        frontier(edges, Ckpt.stageDelta(
+        frontier(edges, Ckpt.stageOnDriver(
             srcs.select(col("source"), col("source").as("id"))),
           Seq("source"), hops = 40)
           .groupBy("source")
@@ -2105,7 +2105,7 @@ object Graph {
           .orderBy(desc("n"), col("component")).limit(1)
         // the core's row count rides its staging action and is the
         // witness all three reachability loops start from
-        val (core, coreN) = Ckpt.stageDelta(comp
+        val (core, coreN) = Ckpt.stageOnDriver(comp
           .join(broadcast(top.select("component")), Seq("component"))
           .select(col("id").as("v")))
         def reach(edges: DataFrame): DataFrame =

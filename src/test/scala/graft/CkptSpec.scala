@@ -1,56 +1,27 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.LogicalRDD
 
-/** [[Ckpt.stageDelta]]: a delta that fits under the session's broadcast
-  * threshold comes back as a driver-local relation with its exact row
-  * count; a threshold <= 0, or one row over the cap, falls back to the
-  * staged (checkpointed) path with the same rows and count.
+/** [[Ckpt.stageOnDriver]]: a loop delta comes back as a driver-local
+  * relation with its exact row count.
   */
 class CkptSpec extends SparkSpec {
 
-  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** `n` single-`long` rows (8 bytes each by the schema's default size)
-    * behind a shuffle, so the frame is not local to begin with. */
+  /** `n` single-`long` rows behind a shuffle, so the frame is not local
+    * to begin with. */
   private def frame(n: Long) =
     spark.range(0, n, 1, 4).repartition(3).toDF("id")
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(_.getLong(0)).sorted.toSeq
-
-  test("a small delta becomes a LocalRelation with its exact count") {
-    val (local, n) = Ckpt.stageDelta(frame(5))
+  test("a delta becomes a LocalRelation with its exact count") {
+    val (local, n) = Ckpt.stageOnDriver(frame(5))
     assert(local.queryExecution.logical.isInstanceOf[LocalRelation],
       local.queryExecution.logical.treeString)
     assert(n == 5L)
-    assert(rows(local) == (0L until 5L))
-  }
-
-  test("threshold -1 stages the same rows and count") {
-    val (staged, n) = withConf(threshold, "-1")(Ckpt.stageDelta(frame(5)))
-    assert(staged.queryExecution.logical.isInstanceOf[LogicalRDD],
-      staged.queryExecution.logical.treeString)
-    assert(n == 5L)
-    assert(rows(staged) == (0L until 5L))
-  }
-
-  test("a delta of cap rows stays local, one row more is staged") {
-    // 24 bytes / 8 bytes per row: cap = 3
-    withConf(threshold, "24") {
-      val (atCap, n3) = Ckpt.stageDelta(frame(3))
-      assert(atCap.queryExecution.logical.isInstanceOf[LocalRelation])
-      assert(n3 == 3L && rows(atCap) == (0L until 3L))
-      val (over, n4) = Ckpt.stageDelta(frame(4))
-      assert(over.queryExecution.logical.isInstanceOf[LogicalRDD],
-        over.queryExecution.logical.treeString)
-      assert(n4 == 4L && rows(over) == (0L until 4L))
-    }
+    assert(local.collect().map(_.getLong(0)).sorted.toSeq == (0L until 5L))
   }
 
   test("an empty delta is local with count 0") {
-    val (empty, n) = Ckpt.stageDelta(frame(0))
+    val (empty, n) = Ckpt.stageOnDriver(frame(0))
     assert(empty.queryExecution.logical.isInstanceOf[LocalRelation])
     assert(n == 0L && empty.collect().isEmpty)
   }

@@ -15,8 +15,8 @@ class SccSpec extends SparkSpec {
     val v = (0L until n.toLong).toDF("v")
     val e = if (edges.isEmpty) Seq((-1L, -1L)).toDF("src", "dst").limit(0)
             else edges.toDF("src", "dst")
-    onBothStagingPaths(Graph.scc(s, v, e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    Graph.scc(s, v, e).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   /** Brute-force components: Floyd–Warshall reachability, component =
@@ -73,8 +73,8 @@ class SccSpec extends SparkSpec {
     // island 9→10 unreachable from 0
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
       (9L, 10L)).toDF("src", "dst")
-    val got = onBothStagingPaths(ops.Graph.bfs(spark, edges, 0L)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    val got = ops.Graph.bfs(spark, edges, 0L)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // shortcut wins (2 at dist 1, not 2); cycle doesn't relabel 0;
     // island absent
     assert(got == Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 2))
@@ -84,9 +84,8 @@ class SccSpec extends SparkSpec {
     import spark.implicits._
     val chain = (0L until 6L).sliding(2).map(p => (p(0), p(1))).toSeq
       .toDF("src", "dst")
-    val got = onBothStagingPaths(
-      ops.Graph.bfs(spark, chain, 0L, maxIter = 3)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    val got = ops.Graph.bfs(spark, chain, 0L, maxIter = 3)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 3))
   }
 
@@ -97,14 +96,14 @@ class SccSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
       (9L, 10L)).toDF("src", "dst")
     val seeds = Seq((0L, 0L), (3L, 3L)).toDF("source", "id")
-    val keyed = onBothStagingPaths(ops.Graph.frontier(edges, (seeds, 2L),
+    val keyed = ops.Graph.frontier(edges, Ckpt.stageCounted(seeds),
         Seq("source"), hops = 10, maxIter = 10)
       .collect().groupBy(_.getLong(0))
       .map { case (src, rows) =>
-        src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap })
+        src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap }
     for (src <- Seq(0L, 3L)) {
-      val single = onBothStagingPaths(ops.Graph.bfs(spark, edges, src)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+      val single = ops.Graph.bfs(spark, edges, src)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(keyed(src) == single, s"source $src")
     }
     assert(keyed(3L) == Map(3L -> 0, 0L -> 1, 1L -> 2, 2L -> 2))
@@ -118,17 +117,15 @@ class SccSpec extends SparkSpec {
   }
 
   test("SSSP converging on round maxIter returns the distances") {
-    val got = onBothStagingPaths(
-      ops.Graph.sssp(spark, weightedChain(), 0L, maxIter = 3)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val got = ops.Graph.sssp(spark, weightedChain(), 0L, maxIter = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 2L, 2L -> 5L))
   }
 
   test("SSSP one round short of its bound fails loudly, naming the loop") {
-    val msg = onBothStagingPaths(intercept[IllegalStateException](
+    val e = intercept[IllegalStateException](
       ops.Graph.sssp(spark, weightedChain(), 0L, maxIter = 2).collect())
-      .getMessage)
-    assert(msg.contains("SSSP relaxation"), msg)
-    assert(msg.contains("within 2 rounds"), msg)
+    assert(e.getMessage.contains("SSSP relaxation"), e.getMessage)
+    assert(e.getMessage.contains("within 2 rounds"), e.getMessage)
   }
 }

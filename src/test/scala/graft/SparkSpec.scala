@@ -20,31 +20,4 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
-
-  /** Run `f` with SQL conf `key` set to `value` on the shared session,
-    * restoring the previous setting afterwards (suites run one at a
-    * time, see build.sbt). */
-  def withConf[T](key: String, value: String)(f: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Run `f` on both staging paths of [[Ckpt.stageDelta]] and return
-    * its result after asserting the two agree: once at the default
-    * broadcast threshold, where small-graph loop deltas stay on the
-    * driver, and once at 20 bytes — one row of the frontier and SSSP
-    * delta schemas — so a loop switches between the driver-local and
-    * the staged path whenever its delta crosses one row. */
-  def onBothStagingPaths[T](f: => T): T = {
-    val local = f
-    val staged = withConf("spark.sql.autoBroadcastJoinThreshold", "20")(f)
-    assert(staged == local,
-      s"staged path differs from the local one: $staged vs $local")
-    local
-  }
 }
