@@ -1,13 +1,19 @@
 package graft
+
+import org.apache.spark.GraftBus
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args.toSeq
     val spark = Harness.localSession()
     // Driver round-trip audit: count Spark jobs per run. Job counts
-    // are deterministic (unlike this host's timings), so they expose
-    // latency-bound queries — many small jobs at 8c/32c ratio ≈ 1 —
-    // even in a noisy epoch.
+    // repeat where timings do not, so they expose latency-bound
+    // queries — many small jobs at 8c/32c ratio ≈ 1 — even in a noisy
+    // epoch. One exception: AQE's empty-relation propagation races
+    // query-stage completion, so a loop's first run can differ by a
+    // job (k1_scc 153 or 154 at sf0.1).
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -20,18 +26,23 @@ object PlanProbe {
       // Build the DF inside each timed run, exactly like Bench — the
       // streaming queries execute their stream during fn(), so timing
       // only the noop write would miss all their work.
-      def once(): (Double, Int) = {
+      // Compiles are the codegen classes built during the run (a
+      // JVM-wide counter): a warm plan shape should build none.
+      def once(): (Double, Int, Long) = {
         val j0 = jobCount.get()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener bus is async; let job events drain
-        (dt, jobCount.get() - j0)
+        GraftBus.drain(spark.sparkContext) // job events arrive async
+        (dt, jobCount.get() - j0,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
       }
-      val (t1, j1) = once()
-      val (t3, j3) = once()
+      val (t1, j1, c1) = once()
+      val (t3, j3, c3) = once()
       println(f"TIMING $name first=$t1%.2f second=$t3%.2f " +
-        s"jobs_first=$j1 jobs_second=$j3")
+        s"jobs_first=$j1 jobs_second=$j3 " +
+        s"compiles_first=$c1 compiles_second=$c3")
       if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
         fn(spark, sfDir).explain("formatted")
     }

@@ -21,7 +21,14 @@ import org.apache.spark.sql.SparkSession
   *   - SQL scripting (`EXECUTE IMMEDIATE`, `spark.sql.scripting
   *     .enabled`) used by the Sql4 surface;
   *   - AQE/codegen plan shapes that the *_native expression twins and
-  *     PlanProbe assertions key on.
+  *     PlanProbe assertions key on;
+  *   - the codegen cache keyed by (class loader, code), which is why
+  *     [[Sessions.sharedCode]] turns artifact isolation off for the
+  *     stream launcher and child sessions (else every run recompiles);
+  *   - the checkpoint file manager's package (`…streaming
+  *     .checkpointing`) and its selection by
+  *     `spark.sql.streaming.checkpointFileManagerClass`, which the
+  *     stream launcher sets through `classOf`.
   *
   * Every entrypoint (the harness mains via [[Harness.localSession]],
   * RecoveryDrill, the test suite) asserts the pin at session start so

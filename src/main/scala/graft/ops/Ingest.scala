@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Ckpt.StageOps
-import graft.{Oracles, Tables}
+import graft.{Oracles, Sessions, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -124,17 +124,14 @@ object Ingest {
     // the override here keeps it from leaking to other reads in the
     // session, whose listing behavior should not depend on whether a3
     // ran first
-    val prev = s.conf.getOption(key)
-    if (scheme == null || scheme == "file") s.conf.set(key, "10000")
-    val scanned =
-      try s.read
+    val local = if (scheme == null || scheme == "file") Seq(key -> "10000")
+      else Nil
+    val scanned = Sessions.withConf(s, local: _*) {
+      s.read
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.txt")
         .text(root)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+    }
     scanned
       .select(col("value").as("line"),
         input_file_name().as("file"))

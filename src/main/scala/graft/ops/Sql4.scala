@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -228,24 +228,18 @@ object Sql4 {
         // returned frame is the script's final plain SELECT, so
         // restoring immediately after sql() is safe, and the flag must
         // not leak into every subsequent query in the shared session
-        // (the runToMemory shuffle-width restore discipline)
-        val scriptKey = "spark.sql.scripting.enabled"
-        val prior = s.conf.getOption(scriptKey)
-        s.conf.set(scriptKey, "true")
-        try s.sql(
-          """BEGIN
-            |  DECLARE i INT DEFAULT 1;
-            |  DECLARE total BIGINT DEFAULT 0;
-            |  WHILE i <= 4 DO
-            |    SET total = total +
-            |      (SELECT count(*) FROM events WHERE value >= 100.0D * i);
-            |    SET i = i + 1;
-            |  END WHILE;
-            |  SELECT total AS cum_hot, i - 1 AS steps;
-            |END""".stripMargin)
-        finally prior match {
-          case Some(v) => s.conf.set(scriptKey, v)
-          case None    => s.conf.unset(scriptKey)
+        Sessions.withConf(s, "spark.sql.scripting.enabled" -> "true") {
+          s.sql(
+            """BEGIN
+              |  DECLARE i INT DEFAULT 1;
+              |  DECLARE total BIGINT DEFAULT 0;
+              |  WHILE i <= 4 DO
+              |    SET total = total +
+              |      (SELECT count(*) FROM events WHERE value >= 100.0D * i);
+              |    SET i = i + 1;
+              |  END WHILE;
+              |  SELECT total AS cum_hot, i - 1 AS steps;
+              |END""".stripMargin)
         }
       },
       Some(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,7 +199,7 @@ object Storage {
   private[graft] def cboQuery(s0: SparkSession, d: String,
                               cbo: Boolean): DataFrame = {
     val (lt, ot, ct, nt) = cboTables(s0, d)
-    val s = s0.newSession()
+    val s = Sessions.child(s0)
     s.conf.set("spark.sql.cbo.enabled", cbo.toString)
     s.conf.set("spark.sql.cbo.joinReorder.enabled", cbo.toString)
     s.sql(
@@ -465,7 +465,7 @@ object Storage {
     // the skew-split marker in the final adaptive plan.
     Q("m_aqe_skew",
       (s0, d) => {
-        val s = s0.newSession()
+        val s = Sessions.child(s0)
         s.conf.set("spark.sql.adaptive.enabled", "true")
         s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")

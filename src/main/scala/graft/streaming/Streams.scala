@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.Ckpt.StageOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Sessions
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` fixture (SURVEY §2 M streaming
@@ -70,9 +73,6 @@ object Streams {
     }
   }
 
-  /** Run a streaming DF to completion (availableNow) into a memory sink
-    * and return the sink contents as a batch DataFrame.
-    */
   /** Peak state-store footprint of the most recent streaming run:
     * (operatorName, numRowsTotal, memoryUsedBytes) per stateful
     * operator — the PERF.md state-sizing audit reads this right after
@@ -81,6 +81,59 @@ object Streams {
     new java.util.concurrent.atomic.AtomicReference[
       Seq[(String, Long, Long)]](Nil)
 
+  /** Shuffle/state partitions for STREAMING queries only: sized to the
+    * MEASURED state (state-sizing audit: ~40 k rows / 8.4 MB for the
+    * largest operator here), not to the core count. Each stateful
+    * operator commits one delta file per state store per partition per
+    * micro-batch (a stream-stream join holds FOUR stores per
+    * partition), so the commits, not compute, set the fixed cost:
+    * 32 → 8 partitions cut the join trio ~7.2 → ~3.3 s and the whole
+    * family 41.5 → 23.8 s (measured). Production sizing is the same
+    * rule from the other direction: partitions = state / what one
+    * store instance should hold, decoupled from the batch session's
+    * shuffle width. The streaming engine PINS the partition count at
+    * first checkpoint, so the knob is also what a restart-compatible
+    * redeploy must hold fixed; env-overridable for state that outgrows
+    * it. */
+  private val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+
+  /** The one place a graft stream starts: runs `w` to completion
+    * (availableNow) and returns its terminated query. From `start()`
+    * until termination it holds three session settings, then restores
+    * each key's previous value (also when the stream throws):
+    *
+    *   1. [[streamParts]] shuffle partitions;
+    *   2. [[graft.Sessions.sharedCode]]: Spark clones the session for
+    *      every stream, and with artifact isolation on each clone runs
+    *      its tasks on a fresh class loader, so every run recompiled
+    *      its 14-15 generated classes (measured);
+    *   3. Spark's `FileSystemBasedCheckpointFileManager`. The default
+    *      manager renames through `FileContext`, and without libhadoop
+    *      Hadoop's local file system forks a `readlink` process for
+    *      every rename — ~230 forks per m_stream_tumbling run, most of
+    *      its state-commit time (measured). Every graft stream
+    *      checkpoints under `java.io.tmpdir` (the memory sink's
+    *      temporary checkpoint included), a local file system where
+    *      rename(2) is atomic, so Spark's warning that `FileSystem`
+    *      renames may not be atomic does not apply.
+    *
+    * The stream clones the session conf when it starts; holding the
+    * settings until termination removes any dependence on when that
+    * clone happens. Queries here run sequentially per session. */
+  private def launch(s: SparkSession,
+                     w: DataStreamWriter[Row]): StreamingQuery =
+    Sessions.withConf(s,
+      SQLConf.SHUFFLE_PARTITIONS.key -> streamParts,
+      Sessions.sharedCode,
+      SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key ->
+        classOf[FileSystemBasedCheckpointFileManager].getName) {
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+
+  /** Run a streaming DF to completion into a memory sink and return the
+    * sink contents as a batch DataFrame. */
   private def runToMemory(s: SparkSession, df: DataFrame,
                           mode: String): DataFrame = {
     // State store provider: MEASURED choice, not a default. RocksDB +
@@ -104,55 +157,27 @@ object Streams {
       s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "10s")
     }
     val sink = s"graft_stream_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    // Shuffle/state partitions for the STREAMING query only: sized to
-    // the MEASURED state (state-sizing audit: ~40 k rows / 8.4 MB for
-    // the largest operator here), not to the core count. Each stateful
-    // operator commits one delta file per state store per partition per
-    // micro-batch (a stream-stream join holds FOUR stores per
-    // partition), and on this syscall-expensive host those commits —
-    // not compute — dominate the fixed cost: 32 → 8 partitions cut the
-    // join trio ~7.2 → ~3.3 s and the whole family 41.5 → 23.8 s (measured). Production
-    // sizing is the same rule from the other direction: partitions =
-    // state / what one store instance should hold, decoupled from the
-    // batch session's shuffle width. The streaming engine PINS the
-    // partition count at first checkpoint, so the knob is also what a
-    // restart-compatible redeploy must hold fixed; env-overridable for
-    // state that outgrows it.
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    val batchParts = s.conf.get("spark.sql.shuffle.partitions")
-    // conf held from start() through termination: the stream clones the
-    // session conf at query construction, but holding it for the (run-
-    // to-completion) query's whole life removes any dependence on WHEN
-    // that clone happens; queries here run sequentially per session
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val q = df.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // record the run's peak state-operator footprint (rows + bytes per
-      // operator) for the PERF.md state-sizing audit — observational
-      // only, never part of a query's result
-      // ALWAYS set (Nil for a stateless run) — leaving the previous
-      // run's metrics in place would let a reader attribute them to the
-      // wrong query. Operator identity = position WITHIN one progress
-      // event (two same-named operators — e.g. two stream-stream joins —
-      // are distinct rows, not max-merged); max is only taken ACROSS
-      // progress events, where the same position is the same operator.
-      val perOp = q.recentProgress.flatMap { p =>
-        Option(p.stateOperators).toSeq.flatten.zipWithIndex
-          .map { case (o, i) => ((i, o.operatorName), o) }
-      }
-      lastStateMetrics.set(
-        perOp.groupBy(_._1).toSeq.sortBy(_._1).map { case ((_, op), ms) =>
-          (op, ms.map(_._2.numRowsTotal).max,
-            ms.map(_._2.memoryUsedBytes).max)
-        })
-      s.table(sink)
-    } finally s.conf.set("spark.sql.shuffle.partitions", batchParts)
+    val q = launch(s,
+      df.writeStream.format("memory").queryName(sink).outputMode(mode))
+    // record the run's peak state-operator footprint (rows + bytes per
+    // operator) for the PERF.md state-sizing audit — observational
+    // only, never part of a query's result
+    // ALWAYS set (Nil for a stateless run) — leaving the previous
+    // run's metrics in place would let a reader attribute them to the
+    // wrong query. Operator identity = position WITHIN one progress
+    // event (two same-named operators — e.g. two stream-stream joins —
+    // are distinct rows, not max-merged); max is only taken ACROSS
+    // progress events, where the same position is the same operator.
+    val perOp = q.recentProgress.flatMap { p =>
+      Option(p.stateOperators).toSeq.flatten.zipWithIndex
+        .map { case (o, i) => ((i, o.operatorName), o) }
+    }
+    lastStateMetrics.set(
+      perOp.groupBy(_._1).toSeq.sortBy(_._1).map { case ((_, op), ms) =>
+        (op, ms.map(_._2.numRowsTotal).max,
+          ms.map(_._2.memoryUsedBytes).max)
+      })
+    s.table(sink)
   }
 
   /** Tumbling 1-day window count/sum per event_type with a 1-hour
@@ -371,16 +396,11 @@ object Streams {
     // scope the provider to this query and restore the session default
     // (the HDFS-backed snapshot provider measured faster at fixture
     // scale for the single-blob operators — runToMemory's note)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val table =
-      try runToMemory(s, out.toDF(), "update")
-      finally prev match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None    => s.conf.unset(provKey)
-      }
+    val table = Sessions.withConf(s,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      runToMemory(s, out.toDF(), "update")
+    }
     twsReadBack(table)
   }
 
@@ -450,18 +470,10 @@ object Streams {
         // state buffer holds an order-independent integer
         sum((col("value").cast("decimal(18,4)") * 10000)
           .cast("long")).as("sum_sc"))
-    val batchParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-      val q = agg.writeStream
-        .format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", batchParts)
+    launch(s, agg.writeStream
+      .format("noop")
+      .outputMode("update")
+      .option("checkpointLocation", ckpt))
     // the reader names buffer fields by aggregate FUNCTION, not alias
     // ("count", "sum") — part of what this query pins
     val out = s.read.format("statestore").load(ckpt)
@@ -1238,14 +1250,11 @@ object Streams {
       merged.write.mode("overwrite").parquet(gen)
       cur = Some(gen)
     }
-    val q = eventsStream(s, dir)
+    launch(s, eventsStream(s, dir)
       .select("user_id", "ts", "event_id", "event_type", "value")
       .writeStream
       .foreachBatch(mergeBatch _)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("checkpointLocation", s"$base/ckpt"))
     s.read.parquet(cur.get)
       .select(col("user_id"), col("n"),
         col("sv").cast("double").as("sum_value"),
