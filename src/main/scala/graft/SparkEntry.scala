@@ -23,22 +23,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Stats.trendingRanked(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Every builder first DISARMS the rewrite registrations
-    * (MvRewrite / ArtifactRewrite): a routing registration is scoped
-    * to the query that armed it — it stays live for that query's whole
-    * DataFrame lifetime (collect AND the write path, which builds a
-    * fresh QueryExecution and re-optimizes), and dies the moment any
-    * other query is built, so no later shape-matching query can be
-    * silently routed to a since-stale summary (round-6 ADVICE). A
-    * disarmed re-optimization of an old routed DataFrame falls back to
-    * the semantically identical derivation — never a wrong answer,
-    * only the unrouted cost. */
+  /** One entry per implemented operator from SURVEY.md §2. Every
+    * builder first runs [[graft.functions.GraftFunctions.install]] on
+    * its session, so a session built without graft's extensions (the
+    * harness mains, the benchmark, the driver) has them all before its
+    * first query. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     allQs.map(q => q.name -> { (s: SparkSession, d: String) =>
-      graft.plans.MvRewrite.register(s, None)
-      graft.plans.ArtifactRewrite.register(s, Nil)
+      graft.functions.GraftFunctions.install(s)
       q.fn(s, d)
     }).toMap
 

@@ -1,12 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  BloomFilterMightContain, Cast, Expression, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+
+import graft.plans.{ArtifactRewrite, MvRewrite, TopKPerKeyStrategy}
 
 /** Native codegen'd cosine similarity over two `array<double>` columns.
   *
@@ -101,56 +103,16 @@ case class CosineSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration for graft's native functions.
-  *
-  * Canonical path: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (SparkSessionExtensions.injectFunction). [[GraftFunctions.register]]
-  * covers sessions built without the extension (the driver harness).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSimDescriptor)
-    ext.injectFunction(GraftFunctions.jaccardSortedDescriptor)
-    ext.injectFunction(GraftFunctions.rollingHashesDescriptor)
-    ext.injectOptimizerRule(_ => RewriteHofDotProduct)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
-}
-
+/** graft's one session set-up: every SQL function, optimizer rule and
+  * planner strategy the engine plugs into Catalyst. */
 object GraftFunctions {
-  val cosineSimDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1)))
 
-  val jaccardSortedDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (FunctionIdentifier("jaccard_sorted"),
-      new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted"),
-      (exprs: Seq[Expression]) => JaccardSorted(exprs.head, exprs(1)))
-
-  val rollingHashesDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (FunctionIdentifier("rolling_hashes"),
-      new ExpressionInfo(classOf[RollingHashes].getName, "rolling_hashes"),
-      (exprs: Seq[Expression]) => RollingHashes(exprs.head, exprs(1)))
-
-  /** Idempotent per-session registration of all native functions. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSim(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sorted",
-      exprs => JaccardSorted(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "corr_matrix",
-      exprs => CorrMatrixAgg(exprs),
-      "built-in")
+  /** Every graft SQL function: name -> builder over the call's
+    * arguments. */
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (e => CosineSim(e.head, e(1))),
+    "jaccard_sorted" -> (e => JaccardSorted(e.head, e(1))),
+    "corr_matrix" -> (e => CorrMatrixAgg(e)),
     // Runtime-filter primitives (the machinery behind Spark's own
     // injected bloom joins, surfaced as callable functions):
     // bloom_build(key[, capacity]) aggregates a bloom over xxhash64(key),
@@ -158,50 +120,44 @@ object GraftFunctions {
     // over-capacity build silently saturates to a pass-through, exact
     // but useless, so size it from the build side's key estimate);
     // bloom_probe(bloom, key) tests membership of xxhash64(key).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_build",
-      exprs => {
-        val key = new org.apache.spark.sql.catalyst.expressions.XxHash64(
-          Seq(exprs.head))
-        if (exprs.length >= 2)
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(key,
-              // SQL integer literals parse as INT; the aggregate's
-              // capacity slot is BIGINT-typed
-              org.apache.spark.sql.catalyst.expressions.Cast(
-                exprs(1), org.apache.spark.sql.types.LongType))
-        else
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(key, 1000000L)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_probe",
-      exprs => new org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head,
-          new org.apache.spark.sql.catalyst.expressions.XxHash64(
-            exprs.tail)),
-      "built-in")
+    "bloom_build" -> { e =>
+      val key = new XxHash64(Seq(e.head))
+      // SQL integer literals parse as INT; the aggregate's capacity
+      // slot is BIGINT-typed
+      if (e.length >= 2) new BloomFilterAggregate(key, Cast(e(1), LongType))
+      else new BloomFilterAggregate(key, 1000000L)
+    },
+    "bloom_probe" -> (e =>
+      BloomFilterMightContain(e.head, new XxHash64(e.tail))),
     // cms_estimate(sketch, key): point-frequency probe of the engine's
     // own count_min_sketch aggregate output — the third mergeable-sketch
     // family next to HLL (distinct counts, m_hll_rollup) and bloom
     // (membership): bounded-overcount frequency without per-key state.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate",
-      exprs => CmsEstimate(exprs.head, exprs(1)),
-      "built-in")
+    "cms_estimate" -> (e => CmsEstimate(e.head, e(1))),
     // rolling_hashes(text, g): the Karp-Rabin position-hash stream —
     // the anchor stage of exact substring dedup (t_dup_substrings).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hashes",
-      exprs => RollingHashes(exprs.head, exprs(1)),
-      "built-in")
-  }
+    "rolling_hashes" -> (e => RollingHashes(e.head, e(1))))
 
-  /** Install graft optimizer rules on a session built without the
-    * extensions conf (idempotent). */
-  def installOptimizations(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(RewriteHofDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteHofDotProduct
+  /** Install every graft function, the three rewrite rules (in the
+    * optimizer's "User Provided Optimizers" batch, after the main
+    * batches) and the [[graft.plans.TopKPerKeyStrategy]] on `spark`.
+    * Idempotent and keyed per session: a session's extension lists are
+    * its own, so a `newSession()` child or a session started after
+    * `stop()` installs afresh. [[graft.SparkEntry.queries]] calls it
+    * before every query build; a session that skipped it fails to plan
+    * a routed or top-k query. */
+  def install(spark: SparkSession): Unit = {
+    val x = spark.experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(TopKPerKeyStrategy)) {
+        functions.foreach { case (name, build) =>
+          spark.sessionState.functionRegistry
+            .createOrReplaceTempFunction(name, build, "built-in")
+        }
+        x.extraOptimizations = x.extraOptimizations ++
+          Seq(RewriteHofDotProduct, MvRewrite, ArtifactRewrite)
+        x.extraStrategies = x.extraStrategies :+ TopKPerKeyStrategy
+      }
+    }
+  }
 }

@@ -80,9 +80,8 @@ case class DotProduct(left: Expression, right: Expression)
   * session-wide even over arrays with `containsNull = true`.
   * Conservative by construction: anything else (different
   * zero, non-identity finish lambda, non-double arrays) is left alone.
-  * Installed per-session via `GraftFunctions.installOptimizations`
-  * (`spark.experimental.extraOptimizations`) or cluster-wide via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Installed on every session by `GraftFunctions.install`, so every
+  * `Similarity.dot` caller runs fused.
   */
 object RewriteHofDotProduct extends Rule[LogicalPlan] {
 

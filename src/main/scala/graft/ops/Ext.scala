@@ -372,7 +372,6 @@ object Ext {
     // booleans are fixture-frozen facts, not flaky probabilities.
     Q("m_cms_freq",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.events(s, d)
         val sketch = e.agg(
           expr("count_min_sketch(user_id, 0.001d, 0.99d, 42)").as("cms"),
@@ -1980,7 +1979,6 @@ object Ext {
     // side's distinct-key estimate.
     Q("m_bloom_prune",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.orders(s, d).createOrReplaceTempView("orders")
         Tables.customer(s, d).createOrReplaceTempView("customer")
         s.sql(

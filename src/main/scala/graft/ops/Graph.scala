@@ -1903,26 +1903,21 @@ object Graph {
     // cross joins for the assembly. The oracle re-runs the whole
     // unrolled LPA and recomputes Q independently.
     Q("k16_modularity",
-      (s, d) => {
-        // MV routing of the ITERATIVE artifact: the query below spells
-        // the full 4-round LPA derivation (lpaPlanPure — referenced
-        // three times, and DataFrame reuse clones the subtree), but
-        // ArtifactRewrite proves each clone `sameResult` to the
-        // registered derivation and answers all three from the landed
-        // label table — the k8 loop runs ONCE per (session, dir) at
-        // artifact-build time, never inside this query. Registration
-        // is per-query (disarmed after the plan is built), and the
-        // spec pins the routed plan + result invariance vs the
-        // unrouted loop.
-        // The registration stays armed for THIS query's DataFrame
-        // lifetime — a later .write builds a fresh QueryExecution and
-        // re-optimizes, and must still route (round-7: an eager
-        // disarm made the sink path silently fall back to running the
-        // 3× LPA loop while queryExecution-based pins kept passing).
-        // SparkEntry disarms it the moment any other query is built.
-        armLpaArtifact(s, d)
-        modularityOf(s, d, lpaPlanPure(s, d, rounds = 4))
-      },
+      // MV routing of the ITERATIVE artifact: the query spells the
+      // full 4-round LPA derivation (lpaPlanPure — referenced three
+      // times, and DataFrame reuse clones the subtree), but
+      // ArtifactRewrite proves each clone `sameResult` to the routed
+      // derivation and answers all three from the landed label table —
+      // the k8 loop runs ONCE per (session, dir) at artifact-build
+      // time, never inside this query. The route is carried on this
+      // plan, so a later .write (a fresh QueryExecution that
+      // re-optimizes) still routes, and building other queries cannot
+      // take it away; ArtifactRewriteSpec and SessionSetupSpec pin the
+      // routed plan, the write path and result invariance vs the
+      // unrouted loop.
+      (s, d) => graft.plans.ArtifactRewrite.route(
+        modularityOf(s, d, lpaPlanPure(s, d, rounds = 4)),
+        lpaArtifactDefs(s, d)),
       Some(
         s"""WITH ${lpaOracleCtes(4)}, deg AS (
            |  SELECT src, CAST(count(*) AS BIGINT) AS dg
@@ -2551,7 +2546,7 @@ object Graph {
   /** The LPA derivation as a PURE plan tree — identical semantics to
     * [[lpaLabels]] but without the per-round localCheckpoint, so the
     * logical plan is a deterministic composition the optimizer can
-    * fingerprint (`sameResult`). This is the registration key for
+    * fingerprint (`sameResult`). This is the routing key for
     * [[graft.plans.ArtifactRewrite]]: a consumer that embeds this
     * derivation gets routed to the landed label artifact instead of
     * re-running the loop. Never executed directly (executing it would
@@ -2579,19 +2574,16 @@ object Graph {
   private[graft] def lpaArtifactDir(s: SparkSession, d: String): String =
     Tables.landedDir(s, "graft_lpa_labels", d)(lpaLabels(s, d, rounds = 4))
 
-  /** Install ArtifactRewrite and register the pure 4-round LPA plan
-    * against the landed label table for `d`. Shared by k16_modularity
-    * (which disarms after building its own plan) and the spec's
-    * controls. The candidate registrations are memoized per (session,
-    * dir): building them optimizes 8 copies of the 4-round derivation
-    * plan, which costs whole seconds per call if repeated (the round-7
-    * sf0.1 bench measured k16's median doubling from re-optimization
-    * alone — landing was already cached, the PLANS were not). */
-  private[graft] def armLpaArtifact(s: SparkSession, d: String): Unit = {
-    graft.plans.ArtifactRewrite.install(s)
-    graft.plans.ArtifactRewrite.register(s,
-      Tables.memo(s, s"lpaArt|$d")(buildLpaCandidates(s, d)))
-  }
+  /** The pure 4-round LPA plan paired with the landed label table for
+    * `d`, as route definitions — shared by k16_modularity and the
+    * spec's routed controls. Memoized per (session, dir): building
+    * them optimizes 8 copies of the 4-round derivation plan, which
+    * costs whole seconds per call if repeated (the round-7 sf0.1 bench
+    * measured k16's median doubling from re-optimization alone —
+    * landing was already cached, the PLANS were not). */
+  private[graft] def lpaArtifactDefs(s: SparkSession, d: String)
+      : Seq[graft.plans.ArtifactRewrite.ArtDef] =
+    Tables.memo(s, s"lpaArt|$d")(buildLpaCandidates(s, d))
 
   private def buildLpaCandidates(s: SparkSession, d: String)
       : Seq[graft.plans.ArtifactRewrite.ArtDef] = {
@@ -2601,7 +2593,7 @@ object Graph {
     // one candidate pair per consumer-facing VIEW of the label table
     // (the rename the consumer applies collapses into the derivation's
     // top aggregate — a trivial `v AS dst` alias is even REMOVED — so
-    // each rename normalizes to a distinct canonical plan; registering
+    // each rename normalizes to a distinct canonical plan; pairing
     // the identically-renamed view on both the derivation and artifact
     // side makes the fingerprints line up), plus each view's
     // joinCol-notNull variant — the form a join on that column leaves

@@ -1075,11 +1075,9 @@ object Similarity {
     // at scale, so the fused walk is where the allocation win lives).
     // Must hash-match the exact oracle of the HOF twin above.
     Q("m_minhash_dedup_native",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         minhashPairs(s, d, (a, b) => call_function("jaccard_sorted", a, b))
-          .orderBy("d1", "d2")
-      },
+          .orderBy("d1", "d2"),
       Some(
         s"""WITH $minhashPairsCtes
            |SELECT d1, d2, jaccard FROM pairs
@@ -1636,10 +1634,7 @@ object Similarity {
     // instead of zip_with+aggregate's per-row intermediate array. Must
     // hash-match the exact same oracle as the HOF baseline.
     Q("m_cosine_topk_native",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        cosineTopk(s, d, (a, b) => expr("cosine_sim(qe, ee)"))
-      },
+      (s, d) => cosineTopk(s, d, (a, b) => expr("cosine_sim(qe, ee)")),
       Some(cosineTopkOracle)),
 
     // ----- sign-LSH approximate NN: bucket = sign bits of the first 8

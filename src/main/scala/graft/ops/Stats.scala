@@ -229,7 +229,6 @@ object Stats {
     // Must hash-match the same oracle as f8_corr_matrix.
     Q("f8_corr_matrix_native",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val pairs = for {
           i <- corrCols.indices
           j <- corrCols.indices if i < j

@@ -556,31 +556,27 @@ object Storage {
 
     // ----- Transparent materialized-view routing (graft/plans/
     // MvRewrite.scala — see its header for the matcher's safety
-    // rules): the consumer writes the plain fact-table aggregate;
-    // the injected optimizer rule answers it from the pre-aggregated
-    // summary landed once per (session, dir), and the base
-    // `lineitem.parquet` is never opened (StorageSpec pins the
-    // executed plan to contain the summary path and NOT the base
-    // path, plus negative controls: a different aggregate shape and
-    // a filtered query must still scan the base table). The summary
-    // carries exact integers (sum of floored quantities, counts), so
-    // routed and direct answers are bit-identical — the oracle
-    // recomputes from raw lineitem, proving the route changes cost,
-    // never results.
+    // rules): the consumer writes the plain fact-table aggregate and
+    // wraps it in `MvRewrite.route`; the optimizer rule answers it
+    // from the pre-aggregated summary landed once per (session, dir),
+    // and the base `lineitem.parquet` is never opened (StorageSpec
+    // pins the executed plan to contain the summary path and NOT the
+    // base path, plus routed negative controls: a different aggregate
+    // shape and a filtered query must still scan the base table). The
+    // route travels with this plan only — the write path's fresh
+    // QueryExecution still routes, and an unwrapped aggregate of the
+    // same shape never does. The summary carries exact integers (sum
+    // of floored quantities, counts), so routed and direct answers
+    // are bit-identical — the oracle recomputes from raw lineitem,
+    // proving the route changes cost, never results.
     Q("m_mv_rewrite",
-      (s, d) => {
-        // The registration stays armed for THIS query's DataFrame
-        // lifetime (the write path re-optimizes a fresh QueryExecution
-        // and must still route); SparkEntry disarms it the moment any
-        // other query is built, so no later shape-matching query can
-        // be routed to a since-stale summary (round-6 ADVICE).
-        armMvRewrite(s, d)
+      (s, d) => graft.plans.MvRewrite.route(
         Tables.rawTable(s, d, "lineitem")
           .groupBy(col("l_returnflag"))
           .agg(sum(floor(col("l_quantity"))).as("qty_sum"),
             count(lit(1)).as("n"))
-          .orderBy("l_returnflag")
-      },
+          .orderBy("l_returnflag"),
+        mvSummaryDef(s, d)),
       Some(
         """SELECT l_returnflag,
           |  CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT)
@@ -632,18 +628,13 @@ object Storage {
           |FROM events""".stripMargin)),
   )
 
-  /** Install the MV-routing rule and register the lineitem-by-flag
-    * summary for `d` — shared by the m_mv_rewrite query (which disarms
-    * right after its own plan is built) and by StorageSpec's negative
-    * controls (which arm explicitly around each control plan). */
-  def armMvRewrite(s: SparkSession, d: String): Unit = {
-    graft.plans.MvRewrite.install(s)
-    val mv = s.read.parquet(mvSummaryDir(s, d))
-    graft.plans.MvRewrite.register(s,
-      Some(graft.plans.MvRewrite.MvDef(
-        s"$d/lineitem.parquet", mv.queryExecution.analyzed,
-        "l_returnflag", "qty_sum", "n")))
-  }
+  /** The lineitem-by-flag summary for `d` as a route definition —
+    * shared by the m_mv_rewrite query and StorageSpec's routed
+    * negative controls. */
+  def mvSummaryDef(s: SparkSession, d: String): graft.plans.MvRewrite.MvDef =
+    graft.plans.MvRewrite.MvDef(s"$d/lineitem.parquet",
+      s.read.parquet(mvSummaryDir(s, d)).queryExecution.analyzed,
+      "l_returnflag", "qty_sum", "n")
 
   /** Land the GDPR-deleted events copy once per (session, dir):
     * victims = user_id % 97 == 0, the deterministic ~1% erasure set. */
@@ -651,16 +642,11 @@ object Storage {
     Tables.landedDir(s, "graft_gdpr", d)(
       Tables.events(s, d).filter(col("user_id") % 97 =!= 0))
 
-  /** Land the lineitem-by-flag summary once per (session, dir); the
-    * registration is disarmed while the summary itself materializes so
-    * the build can never be routed. */
+  /** Land the lineitem-by-flag summary once per (session, dir). */
   private def mvSummaryDir(s: SparkSession, d: String): String =
-    Tables.landedDirWith(s, "graft_mv_li_flag", d) { loc =>
-      graft.plans.MvRewrite.register(s, None) // never route the build
+    Tables.landedDir(s, "graft_mv_li_flag", d)(
       Tables.rawTable(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(sum(floor(col("l_quantity"))).as("qty_sum"),
-          count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(loc)
-    }
+          count(lit(1)).as("n")))
 }

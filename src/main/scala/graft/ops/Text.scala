@@ -79,10 +79,8 @@ object Text {
     * planted-overlap corpora. Returns one row per doc:
     * (doc_id, n_spans, dup_chars, longest_span, dup_frac, keep).
     */
-  def dupSubstrings(s: SparkSession,
-                    docs: org.apache.spark.sql.DataFrame,
+  def dupSubstrings(docs: org.apache.spark.sql.DataFrame,
                     g: Int = dupGramLen): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     // ANCHOR: one 8-byte Karp-Rabin hash per character offset (native
     // codegen'd single pass), then one balanced groupBy on the hash.
@@ -843,7 +841,7 @@ object Text {
     // The keep verdict compares integers (dup_chars * 5 < len, i.e.
     // < 20% duplicated), never a rounded float.
     Q("t_dup_substrings",
-      (s, d) => dupSubstrings(s, Tables.documents(s, d)).orderBy("doc_id"),
+      (s, d) => dupSubstrings(Tables.documents(s, d)).orderBy("doc_id"),
       Some(
         s"""WITH pos AS (
            |  SELECT doc_id, CAST(p AS INT) AS pos,

@@ -1,16 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, IsNotNull,
-  NamedExpression}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
+  IsNotNull, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
-  Project}
+  Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Plan-fingerprint materialized-artifact routing — the iterative
   * sibling of [[MvRewrite]]'s aggregate matcher. MvRewrite recognizes
   * ONE fixed aggregate shape; this rule recognizes an ARBITRARY
-  * registered subplan by semantic plan equality (`sameResult`, i.e.
+  * routed subplan by semantic plan equality (`sameResult`, i.e.
   * canonicalized-plan comparison — exprIds, alias names, and other
   * cosmetic differences normalized away) and substitutes the landed
   * artifact's scan for the whole subtree.
@@ -19,7 +19,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * expensive ITERATIVE computation (LPA labels, SCC components, an
   * ANN index) once and answers every downstream query from the
   * artifact. The consumer keeps writing the derivation — the
-  * optimizer proves "this subtree IS the registered derivation" and
+  * optimizer proves "this subtree IS the routed derivation" and
   * swaps in the scan, so a k16-style quality score never re-runs the
   * k8 label loop (three times over, once per reference, since
   * DataFrame reuse clones the subtree).
@@ -28,7 +28,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * the main optimizer has normalized the query side — by then a
   * derivation subtree under a join has picked up INFERRED IsNotNull
   * filters on its join keys (InferFiltersFromConstraints), so it no
-  * longer equals the standalone-optimized derivation. The registration
+  * longer equals the standalone-optimized derivation. The route
   * therefore carries one candidate per expected inferred-filter form
   * ([[ArtifactRewrite.candidates]]: the plain plan plus its
   * notNull-filtered variants), and a match against a filtered
@@ -44,12 +44,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     artifact's columns POSITIONALLY under the matched subtree's
   *     original `exprId`s (canonicalized output order is part of
   *     `sameResult`), so downstream resolution is untouched;
-  *   - registration is per-query: the consumer arms, forces its own
-  *     optimization, and disarms — no session-wide stale routing.
+  *   - routing is carried on the consumer's plan, as in MvRewrite:
+  *     [[route]] wraps it in an [[ArtRoute]] marker, and the rule
+  *     substitutes only inside a marker, then strips it — so routing
+  *     lives exactly as long as the plan that asked for it.
   */
 object ArtifactRewrite extends Rule[LogicalPlan] {
 
-  /** One registered routing candidate: the optimized derivation plan
+  /** One routing candidate: the optimized derivation plan
     * it answers for, the analyzed plan of the landed table holding the
     * derivation's result, and the positions of output columns whose
     * IsNotNull filter must be re-applied on the substitution (because
@@ -57,33 +59,23 @@ object ArtifactRewrite extends Rule[LogicalPlan] {
   final case class ArtDef(src: LogicalPlan, mv: LogicalPlan,
                           notNullCols: Seq[Int])
 
-  /** Per-session registrations (round-8 fix, same rationale as
-    * [[MvRewrite.reg]]): bounded access-order LRU, NOT a weak map —
-    * ArtDef plans back-reference their session, which would pin a
-    * weak key forever. Arm/disarm take the session explicitly; only
-    * the optimizer-side getter reads the thread-local active session
-    * (correct under Catalyst's withActive). */
-  private val reg = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[SparkSession, Seq[ArtDef]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, Seq[ArtDef]])
-      : Boolean = size > 64
-    })
+  /** Marker: subtrees of `child` may be answered from `defs`. Its
+    * output is its child's; the rule strips it in the user-optimizer
+    * batch, so a session without the rule cannot plan it. */
+  final case class ArtRoute(defs: Seq[ArtDef], child: LogicalPlan)
+      extends UnaryNode {
+    override def output: Seq[Attribute] = child.output
+    override protected def stringArgs: Iterator[Any] =
+      Iterator(s"${defs.length} candidates")
+    override protected def withNewChildInternal(
+        newChild: LogicalPlan): ArtRoute = copy(child = newChild)
+  }
 
-  def registered: Seq[ArtDef] =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(s => Option(reg.get(s))).getOrElse(Nil)
-
-  def registeredIn(s: SparkSession): Seq[ArtDef] =
-    Option(reg.get(s)).getOrElse(Nil)
-
-  def register(s: SparkSession, v: Seq[ArtDef]): Unit = reg.put(s, v)
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
+  /** `df` with every subtree matching one of `defs` answered from its
+    * landed artifact. */
+  def route(df: DataFrame, defs: Seq[ArtDef]): DataFrame =
+    GraftSqlBridge.ofRows(df.sparkSession,
+      ArtRoute(defs, df.queryExecution.analyzed))
 
   /** Build the candidate set for one derivation: the plain optimized
     * plan, plus — for each named column — the optimized plan of the
@@ -108,10 +100,8 @@ object ArtifactRewrite extends Rule[LogicalPlan] {
     plain +: filtered
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = {
-    val defs = registered
-    if (defs.isEmpty) plan
-    else plan transformUp {
+  def apply(plan: LogicalPlan): LogicalPlan = plan transform {
+    case ArtRoute(defs, routed) => routed transformUp {
       case p if p.resolved && defs.exists(a =>
           p.output.length == a.src.output.length &&
             p.output.length == a.mv.output.length &&

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Count, Sum}
@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
 
 /** Transparent materialized-view routing — the classic warehouse
   * planning lever (Goldstein & Larson, SIGMOD 2001 "Optimizing queries
-  * using materialized views"): a registered summary table answers a
+  * using materialized views"): a routed summary table answers a
   * matching aggregate query WITHOUT touching the base table, and the
   * rewrite happens inside the OPTIMIZER, so the consumer keeps writing
   * the plain `groupBy(...).agg(...)` they always wrote. At 100 TB this
@@ -21,15 +21,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * The matcher is deliberately NARROW and conservative — the safety
   * bar for an injected rule that stays installed session-wide:
   *
-  *   - the aggregate must group by exactly the registered column and
-  *     compute exactly the registered aggregate shapes
+  *   - the aggregate must group by exactly the routed column and
+  *     compute exactly the routed aggregate shapes
   *     (`sum(floor(l_quantity))`, `count(1)` — no DISTINCT, no FILTER
   *     clauses);
   *   - the child tree below the aggregate may contain ONLY
   *     projection/alias nodes above the base-table file scan — any
   *     `Filter` (or join, generator, …) makes the summary unusable
   *     and the plan is left alone;
-  *   - the scan's root path must match the registered base-table path
+  *   - the scan's root path must match the routed base-table path
   *     EXACTLY per scale-factor directory, so a summary built from
   *     one dataset can never answer for another.
   *
@@ -37,59 +37,44 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * operators — the Sort above, a parent join — keep resolving), and
   * the summary holds final per-group values for a grouping identical
   * to the query's, so the replacement is a pure column mapping with
-  * no re-aggregation. Registered via `GraftExtensions`
-  * (injectOptimizerRule) and runtime-installable on an existing
-  * session via `install` (the RewriteHofDotProduct pattern).
+  * no re-aggregation.
+  *
+  * Routing is carried on the plan that asks for it: [[route]] wraps
+  * the consumer's plan in an [[MvRoute]] marker, and the rule (one of
+  * the rules `GraftFunctions.install` puts in every session) rewrites
+  * only inside a marker, then strips it. A routed DataFrame therefore
+  * routes for as long as it lives, on every re-optimization of its
+  * plan (the write path builds a fresh QueryExecution over it), and no
+  * other plan — a shape-matching aggregate built beside it, or the
+  * summary's own build — is ever routed.
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
-  /** The registered summary: base-table path hint (scale-factor
-    * specific), the summary table's analyzed plan, and its column
-    * names. Swapped atomically per registration; None disables. */
+  /** A summary table and what it answers: base-table path hint
+    * (scale-factor specific), the summary's analyzed plan, and its
+    * column names. */
   final case class MvDef(basePathHint: String, mv: LogicalPlan,
                          groupCol: String, sumCol: String,
                          countCol: String)
 
-  /** Registrations are PER-SESSION (round-8 fix): a JVM-global var on
-    * a singleton rule let any concurrently-building query disarm
-    * another session's routing mid-DataFrame-lifetime. NOT a weak
-    * map: an MvDef holds an analyzed plan whose relation back-
-    * references its owning session, so a weak key would never be
-    * collectable (the Graph.scala LRU rationale) — a bounded
-    * access-order LRU caps the residue instead, and every query build
-    * disarms, nulling the plan payload anyway. Registration/disarm
-    * take the session EXPLICITLY: resolving it from thread-locals
-    * (active/default session) silently targets the wrong slot for
-    * `newSession()` children on the parent thread — the exact
-    * cross-session interference the per-session map exists to stop.
-    * Only the optimizer-side getter reads the thread-local active
-    * session, which Catalyst guarantees via withActive. */
-  private val reg = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[SparkSession, Option[MvDef]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, Option[MvDef]])
-      : Boolean = size > 64
-    })
+  /** Marker: `child` may be answered from `d`'s summary. Its output is
+    * its child's; the rule strips it in the user-optimizer batch, so a
+    * session without the rule cannot plan it. */
+  final case class MvRoute(d: MvDef, child: LogicalPlan) extends UnaryNode {
+    override def output: Seq[Attribute] = child.output
+    override protected def stringArgs: Iterator[Any] =
+      Iterator(d.basePathHint)
+    override protected def withNewChildInternal(
+        newChild: LogicalPlan): MvRoute = copy(child = newChild)
+  }
 
-  /** Read by [[apply]] during optimization — Catalyst runs rules under
-    * withActive, so the thread-local session is the right one THERE. */
-  def registered: Option[MvDef] =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(s => Option(reg.get(s))).flatten
-
-  def registeredIn(s: SparkSession): Option[MvDef] =
-    Option(reg.get(s)).flatten
-
-  def register(s: SparkSession, v: Option[MvDef]): Unit = reg.put(s, v)
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
+  /** `df` with its matching aggregates answered from `d`'s summary. */
+  def route(df: DataFrame, d: MvDef): DataFrame =
+    GraftSqlBridge.ofRows(df.sparkSession,
+      MvRoute(d, df.queryExecution.analyzed))
 
   /** Only passthrough Project/SubqueryAlias between the aggregate and
-    * the scan of the registered base path — anything else (a Filter, a
+    * the scan of the routed base path — anything else (a Filter, a
     * join, a Project that COMPUTES a column) invalidates reuse. On a
     * match, returns the scan relation's output attributes so the
     * caller can resolve the aggregate's references by `exprId`, never
@@ -118,7 +103,7 @@ object MvRewrite extends Rule[LogicalPlan] {
                         scan: Seq[Attribute]): Boolean =
     scan.exists(s => s.exprId == a.exprId && s.name == name)
 
-  /** Classify one aggregate-list entry against the registered shapes:
+  /** Classify one aggregate-list entry against the routed shapes:
     * the grouping column itself, sum(floor(l_quantity)), or count(1) —
     * every column reference resolved by exprId against the scan.
     */
@@ -137,9 +122,8 @@ object MvRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = registered match {
-    case None => plan
-    case Some(d) => plan transform {
+  def apply(plan: LogicalPlan): LogicalPlan = plan transform {
+    case MvRoute(d, routed) => routed transform {
       case agg @ Aggregate(Seq(g: AttributeReference), aggs, child, _)
           if g.name == d.groupCol =>
         scanOutput(child, d.basePathHint) match {

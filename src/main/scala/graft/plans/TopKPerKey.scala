@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   AttributeSet, BindReferences, Descending, Expression, InterpretedOrdering,
@@ -119,13 +119,9 @@ case class TopKPerKeyExec(keys: Seq[Expression], ordering: Seq[SortOrder],
       newChild: SparkPlan): TopKPerKeyExec = copy(child = newChild)
 }
 
-/** User API + per-session strategy installation. */
+/** User API. [[TopKPerKeyStrategy]] is installed with the rest of
+  * graft's extensions by `GraftFunctions.install`. */
 object TopKPerKey {
-
-  def installStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
 
   /** Exact top-`k` rows per `keys` group, ordered by `orderCol`
     * descending with `tieCol` ascending as the unique tie-break.
@@ -134,7 +130,6 @@ object TopKPerKey {
              tieCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
-    installStrategy(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       analyzed.output.find(_.name == n).getOrElse(

@@ -41,7 +41,6 @@ class ApproxSpec extends SparkSpec {
     * estimate never undercounts any user_id, and overcounts by at most
     * ceil(eps * N). Deterministic — the sketch is seeded. */
   test("count-min estimates bounded for all keys") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.events(spark, sf)
     val sketch = e.agg(
       expr("count_min_sketch(user_id, 0.001d, 0.99d, 42)").as("cms"),
@@ -72,7 +71,6 @@ class ApproxSpec extends SparkSpec {
     * provably occurred (some estimate strictly exceeds its exact
     * count). */
   test("count-min stays one-sided under forced collisions") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val keys = (0L until 2000L).map(k => k -> (k % 7 + 1)).toDF("k", "reps")
       .select(col("k"), explode(sequence(lit(1), col("reps"))).as("r"))

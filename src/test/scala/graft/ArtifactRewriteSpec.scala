@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
   * (graft/plans/ArtifactRewrite.scala): k16_modularity spells the full
   * 4-round label-propagation derivation, and the optimizer must answer
   * every embedded copy of it from the landed label table — never by
-  * re-running the loop. Also pins per-query registration scope and
-  * routed ≡ unrouted results (the artifact changes cost, not answers).
+  * re-running the loop. Also pins the write path and routed ≡ unrouted
+  * results (the artifact changes cost, not answers); SessionSetupSpec
+  * pins the route's scope.
   */
 class ArtifactRewriteSpec extends SparkSpec {
 
@@ -39,32 +40,28 @@ class ArtifactRewriteSpec extends SparkSpec {
       .ofRows(spark, df.queryExecution.logical)
     assert(survivors(rewritten.queryExecution.optimizedPlan).isEmpty,
       "a fresh QueryExecution (the write path) no longer routes")
-    // registration scope: building ANY other query disarms it, so a
-    // later shape-matching query can never be stale-routed
-    SparkEntry.queries("f1_groupby_agg")(spark, sf)
-    assert(graft.plans.ArtifactRewrite.registeredIn(spark).isEmpty,
-      "building another query did not disarm the artifact registration")
   }
 
   test("routing is result-invariant vs the unrouted derivation") {
     val routed = SparkEntry.queries("k16_modularity")(spark, sf)
       .collect().map(_.toSeq)
-    // unrouted twin: the same score computed with the rule disarmed
-    // (k16Unrouted is not a SparkEntry query, so disarm explicitly)
-    graft.plans.ArtifactRewrite.register(spark, Nil)
+    // unrouted twin: the same score over the label loop, unwrapped
     val direct = ops.Graph.k16Unrouted(spark, sf).collect().map(_.toSeq)
     assert(routed.toSeq == direct.toSeq,
       "routed and unrouted modularity differ")
   }
 
   test("a semantically different derivation must NOT route") {
-    ops.Graph.armLpaArtifact(spark, sf)
-    try {
-      // 3 rounds instead of the registered 4 — sameResult must reject
-      val p3 = ops.Graph.lpaPlanPure(spark, sf, rounds = 3)
-        .queryExecution.optimizedPlan.toString
-      assert(!p3.contains("graft_lpa_labels"),
-        s"a 3-round LPA plan was wrongly routed to the 4-round artifact:\n$p3")
-    } finally graft.plans.ArtifactRewrite.register(spark, Nil)
+    def routedPlan(rounds: Int): String =
+      graft.plans.ArtifactRewrite.route(
+          ops.Graph.lpaPlanPure(spark, sf, rounds),
+          ops.Graph.lpaArtifactDefs(spark, sf))
+        .queryExecution.executedPlan.toString
+    // the routed 4-round derivation itself reads the artifact ...
+    assert(routedPlan(4).contains("graft_lpa_labels"))
+    // ... but 3 rounds instead of 4 — sameResult must reject
+    val p3 = routedPlan(3)
+    assert(!p3.contains("graft_lpa_labels"),
+      s"a 3-round LPA plan was wrongly routed to the 4-round artifact:\n$p3")
   }
 }

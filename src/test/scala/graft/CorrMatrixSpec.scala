@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** CorrMatrixAgg vs Spark's builtin corr on multi-partition data — the
@@ -12,7 +11,6 @@ class CorrMatrixSpec extends SparkSpec {
   test("single-pass matrix equals pairwise corr to 1e-10, across merges") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 2000).map { i =>
       val a = rnd.nextDouble() * 100
@@ -36,7 +34,6 @@ class CorrMatrixSpec extends SparkSpec {
   test("constant column yields null correlation (zero variance)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = Seq((1.0, 5.0), (2.0, 5.0), (3.0, 5.0)).toDF("x", "y")
     val m = df.agg(expr("corr_matrix(x, y)").as("m"))
       .selectExpr("m[0]").collect().head

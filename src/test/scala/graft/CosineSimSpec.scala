@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd cosine expression: exactness vs the HOF
@@ -11,7 +10,6 @@ class CosineSimSpec extends SparkSpec {
   test("cosine_sim equals the zip_with/aggregate formulation bit-for-bit") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(1.0, 0.0), Seq(0.0, 1.0)),
@@ -35,24 +33,22 @@ class CosineSimSpec extends SparkSpec {
       .withColumn("a", transform(col("embedding"), _.cast("double")))
     val hofDot = aggregate(zip_with(col("a"), col("a"), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v).as("dot")
-    val before = e.select(col("vec_id"), hofDot)
-    assert(before.queryExecution.optimizedPlan.toString
+    val fused = e.select(col("vec_id"), col("a"), hofDot)
+    assert(fused.queryExecution.analyzed.toString
       .contains("aggregate(zip_with"))
-    graft.functions.GraftFunctions.installOptimizations(s)
-    val after = e.select(col("vec_id"), hofDot)
-    val planStr = after.queryExecution.optimizedPlan.toString
+    val planStr = fused.queryExecution.optimizedPlan.toString
     assert(planStr.contains("dot_product"), planStr)
-    // fused result identical to the unfused computation
-    val a = after.orderBy("vec_id").limit(5).collect().map(_.getDouble(1))
-    val b = before.orderBy("vec_id").limit(5).collect().map(_.getDouble(1))
-    assert(a.sameElements(b))
+    // fused result identical to the HOF's left fold from 0.0
+    fused.orderBy("vec_id").limit(5).collect().foreach { r =>
+      val a = r.getSeq[Double](1)
+      assert(r.getDouble(2) == a.map(x => x * x).foldLeft(0.0)(_ + _))
+    }
   }
 
   test("degenerate inputs yield NULL: length mismatch, null element, " +
       "zero norm") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = Seq(
       (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0))),              // len mismatch
       (Seq(Some(1.0), None), Seq(Some(1.0), Some(2.0))),        // null element
@@ -65,7 +61,6 @@ class CosineSimSpec extends SparkSpec {
   test("fused dot_product keeps HOF null semantics (mismatch/null element)") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.installOptimizations(s)
     val df = Seq(
       (Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), Some(4.0))),   // clean: 11.0
       (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0))),              // len mismatch
@@ -84,7 +79,6 @@ class CosineSimSpec extends SparkSpec {
   test("null input propagates null; works via SQL text") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = Seq((Some(Seq(1.0, 2.0)), None: Option[Seq[Double]]))
       .toDF("a", "b")
     assert(df.selectExpr("cosine_sim(a, b)").collect().head.isNullAt(0))

@@ -50,7 +50,7 @@ class DupSubstringsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = docs.toDF("doc_id", "text")
-    val got = Text.dupSubstrings(s, df, G).collect().map { r =>
+    val got = Text.dupSubstrings(df, G).collect().map { r =>
       r.getLong(0) ->
         ((r.getInt(1), r.getLong(2), r.getInt(3), r.getDouble(4),
           r.getBoolean(5)))
@@ -157,7 +157,6 @@ class DupSubstringsSpec extends SparkSpec {
     "position-exact (incl. astral input)") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val rnd = new scala.util.Random(7L)
     val texts = Seq("", "ab", "abc", "aaaaaaaaaa",
       Seq.fill(300)(('a' + rnd.nextInt(5)).toChar).mkString,

@@ -11,7 +11,6 @@ class JaccardSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.01"
 
   test("edge cases: overlap, disjoint, identical, empty, null element") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT
         |  jaccard_sorted(array('a','b','c'), array('b','c','d')) AS overlap,
@@ -31,7 +30,6 @@ class JaccardSpec extends SparkSpec {
   }
 
   test("native equals HOF on random sorted-distinct arrays") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val rows = (1 to 200).map { i =>

@@ -121,7 +121,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bloom prune passes every true match (superset, no misses)") {
-    graft.functions.GraftFunctions.register(spark)
     val urgent = Tables.orders(spark, sf)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_custkey"))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared one-per-JVM SparkSession for the test suite. */
+/** Shared one-per-JVM SparkSession for the test suite, with graft's
+  * extensions installed. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,6 +15,7 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     VersionPin.assertCompat(s)
+    graft.functions.GraftFunctions.install(s)
     s
   }
 }

@@ -392,21 +392,18 @@ class StorageSpec extends SparkSpec {
       s"routed query still scans the base table:\n$plan")
     assert(plan.contains("graft_mv_li_flag"),
       s"routed query does not read the summary:\n$plan")
-    // registration scope: it stays armed for the owning query's
-    // DataFrame lifetime (the write path must still route), and
-    // building ANY other query disarms it — pin that, then re-arm
-    // explicitly for the negative controls so they exercise the
-    // MATCHER, not the disarm
-    SparkEntry.queries("f1_groupby_agg")(spark, sf)
-    assert(graft.plans.MvRewrite.registeredIn(spark).isEmpty,
-      "building another query did not disarm the MV registration")
-    graft.ops.Storage.armMvRewrite(spark, sf)
+    // negative controls, each wrapped in the same route so they
+    // exercise the MATCHER (SessionSetupSpec pins that an unwrapped
+    // plan is never routed)
+    val mvDef = graft.ops.Storage.mvSummaryDef(spark, sf)
+    def routedPlan(p: org.apache.spark.sql.DataFrame): String =
+      graft.plans.MvRewrite.route(p, mvDef)
+        .queryExecution.executedPlan.toString
     // negative control 1: a different aggregate shape must NOT route
     val ctrl = Tables.rawTable(spark, sf, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(sum(floor(col("l_extendedprice"))).as("x"))
-    assert(ctrl.queryExecution.executedPlan.toString
-        .contains("lineitem.parquet"),
+    assert(routedPlan(ctrl).contains("lineitem.parquet"),
       "non-matching aggregate was routed to the summary")
     // negative control 2: a Filter below the aggregate invalidates
     // the summary — must NOT route
@@ -415,8 +412,7 @@ class StorageSpec extends SparkSpec {
       .groupBy(col("l_returnflag"))
       .agg(sum(floor(col("l_quantity"))).as("qty_sum"),
         count(lit(1)).as("n"))
-    assert(fctrl.queryExecution.executedPlan.toString
-        .contains("lineitem.parquet"),
+    assert(routedPlan(fctrl).contains("lineitem.parquet"),
       "filtered aggregate was wrongly routed to the summary")
     // negative control 3: a withColumn that REDEFINES l_quantity under
     // the same name mints a new exprId — name-blind matching would
@@ -426,12 +422,10 @@ class StorageSpec extends SparkSpec {
       .groupBy(col("l_returnflag"))
       .agg(sum(floor(col("l_quantity"))).as("qty_sum"),
         count(lit(1)).as("n"))
-    assert(wctrl.queryExecution.executedPlan.toString
-        .contains("lineitem.parquet"),
+    assert(routedPlan(wctrl).contains("lineitem.parquet"),
       "column-shadowing aggregate was wrongly routed to the summary")
-    // result invariance: disarm the rule and recompute directly
+    // result invariance: the plain, unwrapped aggregate computes directly
     val routed = df.collect().map(_.toSeq)
-    graft.plans.MvRewrite.register(spark, None)
     val direct = Tables.rawTable(spark, sf, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(sum(floor(col("l_quantity"))).as("qty_sum"),
