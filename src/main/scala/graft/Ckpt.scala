@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** The lineage-truncation point for every iterative loop (SCC, WCC,
   * k-core, k-truss, LPA, PageRank, FPS, incremental dedup, BPE rounds,
   * …). One kind of state is not truncated here: the frontier and SSSP
-  * loops collect their deltas to the driver instead ([[stageOnDriver]]),
-  * so those have no lineage left to truncate and never reach [[stage]]
-  * or the reliable knob below.
+  * loops (`Graph.frontier`, `Graph.sssp`) keep their vertex state on
+  * the driver as plain collections, so they have no lineage to truncate
+  * and never reach [[stage]] or the reliable knob below.
   *
   * Default: `localCheckpoint()` — blocks live in EXECUTOR storage
   * memory, truncation is free of any filesystem round-trip, and at
@@ -27,10 +27,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * pins `k1_scc`/`k9_wcc` equality, and the A/B cost is recorded in
   * PERF.md round-11).
   *
-  * Every path stays EAGER (the Spark default for checkpoints; the
-  * driver-local path collects): every loop here counts or reuses the
-  * staged frame immediately, and eager truncation is what bounds the
-  * lineage before the next round builds on it.
+  * Every path stays EAGER (the Spark default for checkpoints): every
+  * loop here counts or reuses the staged frame immediately, and eager
+  * truncation is what bounds the lineage before the next round builds
+  * on it.
   *
   * RETENTION (cluster deployments): under the reliable knob every
   * loop iteration across ~80 call sites writes a permanent checkpoint
@@ -111,21 +111,6 @@ object Ckpt {
     (staged, observedLong(obs, "n"))
   }
 
-  /** Stage a loop delta on the DRIVER: collect `ds` and return it as a
-    * `LocalRelation` with the collected row count as the witness — no
-    * checkpoint and no `Observation`, and later rounds read the rows
-    * from the driver instead of from executor blocks (Spark's planner
-    * would collect a join side this small to broadcast it anyway).
-    * There is no size check: every row stays on the driver for as long
-    * as the caller holds the frame, so call it only where the rows are
-    * bounded by a small input (the graph surface's capped vertex set).
-    */
-  def stageOnDriver(ds: DataFrame): (DataFrame, Long) = {
-    val rows = ds.collect()
-    (ds.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      ds.schema), rows.length.toLong)
-  }
-
   /** The one driver loop every convergent iteration runs on (SCC, WCC,
     * SSSP, frontier expansion, coreness, k-core, k-truss, dedup
     * clustering): a sequence of driver-coordinated materializations,
@@ -140,20 +125,19 @@ object Ckpt {
     * partial answer.
     *
     * FUSED WITNESS: a round reads its witness off its OWN staging action
-    * — a row count ([[stageCounted]]; for [[stageOnDriver]], the
-    * number of rows collected) or any other aggregate observed with
-    * `Dataset.observe` and read back by [[observedLong]] — so loop
-    * control adds no probe job per round. The witness must compare the
-    * round's OUTPUT with state already in hand: certifying the round's
-    * input instead re-admits one redundant round (the k9_wcc lesson,
-    * whose structural star-forest probe therefore stays a separate
-    * cheap job). A done-condition that is part of the answer, such as a
+    * — a row count ([[stageCounted]]; for the driver-held frontier and
+    * SSSP loops, the size of the collection a round computed) or any
+    * other aggregate observed with `Dataset.observe` and read back by
+    * [[observedLong]] — so loop control adds no probe job per round. The
+    * witness must compare the round's OUTPUT with state already in
+    * hand: certifying the round's input instead re-admits one redundant
+    * round (the k9_wcc lesson, whose structural star-forest probe
+    * therefore stays a separate cheap job). A done-condition that is part of the answer, such as a
     * hop horizon, belongs in the witness too; `maxIter` is only the
     * runaway guard.
     *
     * The combinator holds no shared state, so independent loops can be
-    * driven concurrently from several threads (k19's three reachability
-    * loops).
+    * driven concurrently from several threads.
     */
   def fixpoint[S](loop: String, maxIter: Long)(init: (S, Boolean))(
       round: (S, Int) => (S, Boolean)): S = {

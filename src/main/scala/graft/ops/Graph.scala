@@ -3,8 +3,9 @@ package graft.ops
 import graft.Ckpt
 import graft.Ckpt.StageOps
 import graft.{Oracles, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** SURVEY §2 K — strongly connected components without GraphFrames.
   *
@@ -88,9 +89,8 @@ object Graph {
           .join(dstCol, Seq("dst"))
           .filter(col("src_color") === col("dst_color"))
           .select(col("dst").as("src"), col("src").as("dst")).stageCkpt()
-        val roots = Ckpt.stageOnDriver(colors
-          .filter(col("v") === col("color"))
-          .select(col("color").as("component"), col("v").as("id")))
+        val roots = colors.filter(col("v") === col("color"))
+          .select(col("color").as("component"), col("v").as("id"))
         val reached = frontier(sameColorEdges, roots, Seq("component"),
           maxIter = remainingCount)
           .select(col("id").as("v"), col("component"))
@@ -107,7 +107,7 @@ object Graph {
     }
 
     // -- relabel: component := min member id (deterministic). The
-    // found sets are unions of driver-local deltas of very uneven size;
+    // found sets are unions of driver-local relations of very uneven size;
     // hashing them by vertex gives the cached labeling even partitions
     // (a range sort over the uneven ones re-samples: one job more)
     val labels = assigned.groupBy(col("component"))
@@ -120,8 +120,8 @@ object Graph {
     * is driver-coordinated (many jobs), so recomputing it per query
     * would double the most expensive part of the graph surface. The
     * final labeling is persisted in the session memo; the loop's
-    * intermediates are already staged (checkpointed, or collected
-    * frontier deltas).
+    * intermediates are already staged (checkpointed, or the backward
+    * searches' driver-local results).
     */
   private def cappedScc(s: SparkSession, d: String): DataFrame =
     Tables.cached(s, d, "scc")(scc(s, cappedVerts(s, d), cappedEdges(s, d)))
@@ -374,44 +374,70 @@ object Graph {
   def bfs(s: SparkSession, edges: DataFrame, src: Long,
           maxIter: Int = 10): DataFrame = {
     import s.implicits._
-    frontier(edges, (Seq(src).toDF("id"), 1L),
-      hops = maxIter, maxIter = maxIter)
+    frontier(edges, Seq(src).toDF("id"), hops = maxIter, maxIter = maxIter)
   }
 
-  /** First-discovery frontier expansion from `seeds` — `(keys…, id)`
-    * rows with their exact count, driver-local (a `Seq.toDF`, or
-    * [[Ckpt.stageOnDriver]]) or staged — over a directed `(src, dst)`
-    * edge list. Returns `(keys…, id, dist)`: every vertex each key's seeds
-    * reach within `hops` hops, at its minimum hop distance (first
-    * discovery IS the minimum for unit weights).
-    * The keys let several searches share one frame and one join per
-    * round (k13's `source`, SCC's `component`). Each round joins only
-    * the newly-discovered frontier against the edges and anti-joins the
-    * settled set; only that fresh delta is staged, collected to the
-    * driver by [[Ckpt.stageOnDriver]], and the settled set is a union of
-    * already-collected deltas, so no round re-writes it. Every vertex
-    * reached is held on the driver until the result is dropped: callers
-    * run it on the capped graph. The loop ends on the first empty
-    * frontier or on round `hops`; `maxIter` is the runaway guard.
+  /** First-discovery frontier expansion from the `(keys…, id)` rows of
+    * `seeds` over a directed `(src, dst)` edge list. Returns `(keys…,
+    * id, dist)`: every vertex each key's seeds reach within `hops` hops,
+    * at its minimum hop distance (first discovery IS the minimum for
+    * unit weights). The keys let several searches share one loop and
+    * one job per round (k13's `source`, SCC's `component`, k19's `dir`).
+    * A key column the edges also carry restricts a search to the edges
+    * with its own key value (k19's direction-tagged edges).
+    *
+    * The vertex state lives on the driver as plain collections: the
+    * collected seeds, the settled `(keys…, id) -> dist` map and the
+    * current frontier. A round is one Spark job ([[edgesOutOf]]: the
+    * edges out of the frontier's ids, collected); the driver expands
+    * each frontier row over them, drops duplicates and whatever is
+    * already settled. The result is one `LocalRelation`, and every
+    * vertex reached is held on the driver: callers run it on the capped
+    * graph. The loop ends on the first empty frontier or on round
+    * `hops`; `maxIter` is the runaway guard.
     */
-  private[graft] def frontier(edges: DataFrame, seeds: (DataFrame, Long),
+  private[graft] def frontier(edges: DataFrame, seeds: DataFrame,
                               keys: Seq[String] = Nil,
                               hops: Int = Int.MaxValue,
                               maxIter: Long = 100): DataFrame = {
-    val (seedRows, nSeeds) = seeds
-    val start = seedRows.withColumn("dist", lit(0))
-    val ks = keys.map(col)
-    val (reached, _) = Ckpt.fixpoint("frontier expansion", maxIter)(
-      ((start, start), nSeeds == 0 || hops <= 0)) {
+    val start = seeds.select((keys :+ "id").map(col): _*)
+    // positions of the keys the edges carry
+    val carried = keys.indices.filter(i => edges.columns.contains(keys(i)))
+    val edgeCols = (carried.map(keys) :+ "src" :+ "dst").map(col)
+    val seeded = start.collect()
+      .map(r => (r.toSeq.init.toList, r.getLong(keys.size))).distinct.toList
+    val (settled, _) = Ckpt.fixpoint("frontier expansion", maxIter)(
+      ((seeded.map(_ -> 0).toMap, seeded), seeded.isEmpty || hops <= 0)) {
       case ((settled, front), i) =>
-        val nbrs = front.join(edges, front("id") === edges("src"))
-          .select(ks :+ col("dst").as("id"): _*).distinct()
-        val (fresh, n) = Ckpt.stageOnDriver(
-          nbrs.join(settled, keys :+ "id", "left_anti")
-            .withColumn("dist", lit(i)))
-        ((settled.unionByName(fresh), fresh), n == 0 || i >= hops)
+        // (carried key values, src) -> dsts
+        val out = edgesOutOf(edges, front.map(_._2), edgeCols).groupMap(r =>
+          (r.toSeq.dropRight(2).toList, r.getLong(carried.size)))(
+          _.getLong(carried.size + 1))
+        val fresh = front.flatMap { case (k, v) =>
+          out.getOrElse((carried.map(k).toList, v), Array.emptyLongArray)
+            .map(k -> _)
+        }.distinct.filterNot(settled.contains(_))
+        ((settled ++ fresh.map(_ -> i), fresh), fresh.isEmpty || i >= hops)
     }
-    reached
+    val rows = settled.toSeq.map { case ((k, v), d) =>
+      Row.fromSeq(k :+ v :+ d) }
+    seeds.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      start.schema.add("dist", IntegerType, nullable = false))
+  }
+
+  /** A frontier or SSSP round's one Spark job: the `cols` of every edge
+    * whose `src` is among `ids`, collected to the driver. The ids ride
+    * in the task closure (a sorted array read by a udf), so the round
+    * runs no exchange and no broadcast job, and every round has the same
+    * plan shape: no class is compiled after the first (an `isin` list of
+    * ten or fewer literals is compiled into the generated code).
+    */
+  private def edgesOutOf(edges: DataFrame, ids: Iterable[Long],
+                         cols: Seq[Column]): Array[Row] = {
+    val sorted = ids.toArray.distinct.sorted
+    val from =
+      udf((v: Long) => java.util.Arrays.binarySearch(sorted, v) >= 0)
+    edges.filter(from(col("src"))).select(cols: _*).collect()
   }
 
   private def cappedEdges(s: SparkSession, d: String): DataFrame =
@@ -724,30 +750,28 @@ object Graph {
     * rounds, 13 at sf0.01. Dijkstra's priority queue does not
     * distribute; frontier Bellman-Ford is the standard Spark/Pregel
     * form (delta-stepping reduces rounds further but needs bucketed
-    * priorities — unnecessary at these depths). Each round collects the
-    * improved delta and the updated distance map to the driver with
-    * [[Ckpt.stageOnDriver]], so the map of every reached vertex lives
-    * there: callers run it on the capped graph. Returns ("id", "dist").
+    * priorities — unnecessary at these depths). As in [[frontier]], the
+    * distance map and the improved set are driver collections and a
+    * round is one Spark job ([[edgesOutOf]]); the driver takes each
+    * vertex's minimum relaxation and keeps the strict improvements.
+    * Every reached vertex is held on the driver: callers run it on the
+    * capped graph. Returns ("id", "dist") as one `LocalRelation`.
     */
   def sssp(s: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 40): DataFrame = {
     import s.implicits._
-    val seed = Seq((source, 0L)).toDF("id", "dist")
+    val start = Map(source -> 0L)
     val (dist, _) = Ckpt.fixpoint("SSSP relaxation", maxIter)(
-      ((seed, seed), false)) { case ((dist, improvedLast), _) =>
-      val cand = improvedLast
-        .join(edges, improvedLast("id") === edges("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
-        .groupBy("id").agg(min(col("nd")).as("nd"))
-      val (improved, n) = Ckpt.stageOnDriver(
-        cand.join(dist, Seq("id"), "left")
-          .filter(col("dist").isNull || col("nd") < col("dist"))
-          .select(col("id"), col("nd").as("dist")))
-      val (next, _) = Ckpt.stageOnDriver(
-        dist.join(improved, Seq("id"), "left_anti").unionByName(improved))
-      ((next, improved), n == 0)
+      ((start, start), false)) { case ((dist, improvedLast), _) =>
+      val relaxed = edgesOutOf(edges, improvedLast.keys,
+          Seq(col("src"), col("dst"), col("w")))
+        .groupMapReduce(_.getLong(1))(r =>
+          improvedLast(r.getLong(0)) + r.getLong(2))(math.min)
+      val improved = relaxed.filter { case (v, nd) =>
+        dist.get(v).forall(nd < _) }
+      ((dist ++ improved, improved), improved.isEmpty)
     }
-    dist
+    dist.toSeq.toDF("id", "dist")
   }
 
   /** k9/k10 share the sparser "first lineitem per order" co-purchase
@@ -1167,18 +1191,18 @@ object Graph {
            |ORDER BY n_triangles DESC, id LIMIT 20""".stripMargin)),
 
     // ----- K5: single-source BFS shortest paths (directed, unit
-    // weights) — frontier-expansion form: each round joins ONLY the
-    // newly-discovered frontier against the edge list and anti-joins
-    // the settled set, so per-round work is |frontier|·avg-degree, not
-    // |V|² (the all-pairs closure the SCC oracle uses is feasible only
-    // because the graph is capped; BFS is the form that scales —
-    // Pregel's canonical example). First discovery IS the minimum
-    // distance, so no per-node min is ever recomputed. Ten rounds max
-    // (the reference's maxIter, graph_filter.py:129), each round's
-    // delta collected to the driver by Ckpt.stageOnDriver; the
-    // source is the minimum src id,
-    // derived from the data (1-row control-plane aggregate, the SCC
-    // loop's pattern). Oracle: recursive CTE whose UNION dedups
+    // weights) — frontier-expansion form: each round reads ONLY the
+    // edges out of the newly-discovered frontier and drops the settled
+    // set, so per-round work is |frontier|·avg-degree, not |V|² (the
+    // all-pairs closure the SCC oracle uses is feasible only because
+    // the graph is capped; BFS is the form that scales — Pregel's
+    // canonical example). First discovery IS the minimum distance, so
+    // no per-node min is ever recomputed. Ten rounds max (the
+    // reference's maxIter, graph_filter.py:129), each one Spark job
+    // over the cached edges with the settled set and the frontier
+    // held on the driver ([[frontier]]); the source is the minimum src
+    // id, derived from the data (1-row control-plane aggregate, the
+    // SCC loop's pattern). Oracle: recursive CTE whose UNION dedups
     // (id, dist) pairs per level, then min per node.
     Q("k5_bfs",
       (s, d) => {
@@ -1744,12 +1768,13 @@ object Graph {
 
     // ----- multi-source closeness centrality: reach count and distance
     // mass for the top-5 out-degree hubs, via ONE batched BFS whose
-    // state is (source, node, dist) — k sources traverse together in a
-    // single frame instead of k separate loops, so the per-round join
-    // against the cached edge table is paid once for the whole seed
-    // set (the way production scores a seed set's centrality; k5_bfs
-    // is the single-source special case) — [[frontier]] keyed by
-    // `source`, with the oracle's 40-hop horizon.
+    // state is (source, node, dist) — k sources traverse together in
+    // one loop instead of k separate loops, so each round's one job
+    // over the cached edge table is paid once for the whole seed set
+    // (the way production scores a seed set's centrality; k5_bfs is
+    // the single-source special case) — [[frontier]] keyed by
+    // `source`, seeded by the hub frame itself, with the oracle's
+    // 40-hop horizon.
     // Output stays integral (reach count + distance sum) — the
     // closeness RATIO is a trivial client-side division, and emitting
     // the integers keeps the oracle float-free.
@@ -1759,8 +1784,7 @@ object Graph {
         val srcs = edges.groupBy("src").agg(count(lit(1)).as("dg"))
           .orderBy(desc("dg"), col("src")).limit(5)
           .select(col("src").as("source"))
-        frontier(edges, Ckpt.stageOnDriver(
-            srcs.select(col("source"), col("source").as("id"))),
+        frontier(edges, srcs.select(col("source"), col("source").as("id")),
           Seq("source"), hops = 40)
           .groupBy("source")
           .agg(count(lit(1)).as("n_reached"),
@@ -2074,14 +2098,17 @@ object Graph {
     // the core's undirected component but on no core-through path),
     // DISCONNECTED (elsewhere). The original web-crawl census query —
     // run here over the same crawl-shaped capped graph as k1, composing
-    // three primitives the engine already has: the session-cached SCC
-    // labeling (k1's loop, computed once), and three seeded
-    // [[frontier]] reachability loops (forward / backward / undirected)
-    // over the src-partitioned cached edge tables. Classification is four
-    // anti-joins with fixed precedence — pure set algebra, no floats
-    // anywhere. The oracle recomputes the SCC from the recursive
-    // transitive closure and each region from its own seeded recursive
-    // CTE — fully independent derivation of all five counts.
+    // two primitives the engine already has: the session-cached SCC
+    // labeling (k1's loop, computed once), and ONE [[frontier]] loop
+    // keyed by direction over direction-tagged edges (forward, reversed
+    // and symmetrized src-partitioned cached tables), so the three
+    // reachability searches from the core share each round's one job.
+    // The reached sets come back to the driver, which classifies every
+    // capped vertex with fixed precedence (core, in, out, tendril) —
+    // pure set algebra, no floats anywhere. The oracle recomputes the SCC
+    // from the recursive transitive closure and each region from its
+    // own seeded recursive CTE — fully independent derivation of all
+    // five counts.
     Q("k19_bowtie",
       (s, d) => {
         val fwd = cappedDistinctBySrc(s, d)
@@ -2098,47 +2125,31 @@ object Graph {
         val top = comp.groupBy("component")
           .agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), col("component")).limit(1)
-        // the core's row count rides its staging action and is the
-        // witness all three reachability loops start from
-        val (core, coreN) = Ckpt.stageOnDriver(comp
-          .join(broadcast(top.select("component")), Seq("component"))
-          .select(col("id").as("v")))
-        def reach(edges: DataFrame): DataFrame =
-          frontier(edges, (core.select(col("v").as("id")), coreN))
-            .select(col("id").as("v"))
-        // the three seeded fixpoints are INDEPENDENT (each reads only
-        // its own cached edge table and the staged core), and
-        // each round is a driver-coordinated action — run sequentially
-        // the cluster idles through 3× the per-round latency tail, so
-        // drive them as concurrent jobs (Spark's scheduler interleaves
-        // their stages; results are deterministic either way)
-        val (outR, inR, undR) = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.DurationInt
-          val fo = Future(reach(fwd))
-          val fi = Future(reach(rev))
-          val fu = Future(reach(sym))
-          (Await.result(fo, 30.minutes), Await.result(fi, 30.minutes),
-            Await.result(fu, 30.minutes))
-        }
-        val verts = cappedVerts(s, d)
-        val inS = inR.join(core, Seq("v"), "left_anti")
-        val outS = outR.join(core, Seq("v"), "left_anti")
-        val tendril = undR.join(core, Seq("v"), "left_anti")
-          .join(inS, Seq("v"), "left_anti")
-          .join(outS, Seq("v"), "left_anti")
-        val disc = verts.join(undR, Seq("v"), "left_anti")
-        Seq(core.withColumn("bowtie_class", lit("core")),
-          inS.withColumn("bowtie_class", lit("in")),
-          outS.withColumn("bowtie_class", lit("out")),
-          tendril.withColumn("bowtie_class", lit("tendril")),
-          disc.withColumn("bowtie_class", lit("disconnected")))
-          .reduce(_ unionByName _)
-          .join(verts, Seq("v"), "left_semi")
-          .groupBy("bowtie_class")
-          .agg(count(lit(1)).as("n_vertices"))
-          .orderBy("bowtie_class")
+        // each core vertex seeds one search per direction; a search
+        // follows only the edges tagged with its own direction
+        val dirs = Seq("out" -> fwd, "in" -> rev, "und" -> sym)
+        val tagged = dirs.map { case (dir, e) =>
+          e.select(lit(dir).as("dir"), col("src"), col("dst"))
+        }.reduce(_ unionByName _)
+        val found = frontier(tagged,
+          comp.join(broadcast(top.select("component")), Seq("component"))
+            .select(explode(array(dirs.map(p => lit(p._1)): _*)).as("dir"),
+              col("id")),
+          Seq("dir")).collect()
+        def region(dir: String, within: Int = Int.MaxValue): Set[Long] =
+          found.collect {
+            case Row(`dir`, v: Long, dist: Int) if dist <= within => v
+          }.toSet
+        // the seeds are the only vertices at distance 0
+        val core = region("out", within = 0)
+        val Seq(out, in, und) = dirs.map(p => region(p._1))
+        def bowtieClass(v: Long): String =
+          if (core(v)) "core" else if (in(v)) "in" else if (out(v)) "out"
+          else if (und(v)) "tendril" else "disconnected"
+        import s.implicits._
+        cappedVerts(s, d).collect()
+          .groupMapReduce(r => bowtieClass(r.getLong(0)))(_ => 1L)(_ + _)
+          .toSeq.sorted.toDF("bowtie_class", "n_vertices")
       },
       Some(
         s"""WITH RECURSIVE $sccOracleCtes, sizes AS (

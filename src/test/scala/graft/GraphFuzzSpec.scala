@@ -244,38 +244,69 @@ class GraphFuzzSpec extends SparkSpec {
   }
 
   test("fuzz: BFS, keyed frontier and SSSP match brute-force distances") {
-    // every third SCC-family index: each graph runs three loops
+    // every third SCC-family index; each graph's loops run over four
+    // edge frames that must all give the brute-force maps: as
+    // generated; with every edge doubled (the SSSP copy one heavier)
+    // and a self-loop on every vertex, so the driver-side deduplication
+    // and minimum have work to do; and split into 1 and into 7
+    // partitions
     for (i <- indicesFor(0) if i % 3 == 0) {
       val seed = baseSeed + 9000 + i // disjoint graphs from the SCC run
       val (n, edges) = gen(seed, maxN = 16)
       val c = ctx("frontier", i, seed, n, edges.size)
       val s = spark
       import s.implicits._
-      val e = edgeDf(edges)
-      val bfs = Graph.bfs(s, e, 0L).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(bfs == bruteBfs(edges, 0L, 10), s"$c bfs")
-
-      val srcs = Seq(0L, n / 2L)
-      val keyed = Graph.frontier(e,
-          (srcs.map(v => (v, v)).toDF("source", "id"), srcs.size.toLong),
-          Seq("source"), hops = 10, maxIter = 10)
-        .collect().groupBy(_.getLong(0))
-        .map { case (src, rows) =>
-          src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap }
-      for (src <- srcs)
-        assert(keyed(src) == bruteBfs(edges, src, 10), s"$c source $src")
-
       val weighted = edges.map { case (a, b) =>
         (a, b, 1L + (a * 31 + b * 17 + seed) % 5) }
-      val w = if (weighted.isEmpty) Seq((-1L, -1L, 1L))
-          .toDF("src", "dst", "w").limit(0)
-        else weighted.toDF("src", "dst", "w")
-      // a shortest path has at most n - 1 edges, so round n improves
-      // nothing
-      val sssp = Graph.sssp(s, w, 0L, maxIter = n)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(sssp == bruteSssp(weighted, 0L), s"$c sssp")
+      def weightedDf(ws: Seq[(Long, Long, Long)]) =
+        if (ws.isEmpty) Seq((-1L, -1L, 1L)).toDF("src", "dst", "w").limit(0)
+        else ws.toDF("src", "dst", "w")
+      val selfLoops = (0L until n.toLong).map(v => (v, v))
+      val variants = Seq(
+        ("as generated", edgeDf(edges), weightedDf(weighted)),
+        ("doubled, self-loops", edgeDf(edges ++ edges ++ selfLoops),
+          weightedDf(weighted ++ weighted.map { case (a, b, w) =>
+            (a, b, w + 1) } ++ selfLoops.map { case (a, b) => (a, b, 1L) })),
+        ("1 partition", edgeDf(edges).repartition(1),
+          weightedDf(weighted).repartition(1)),
+        ("7 partitions", edgeDf(edges).repartition(7),
+          weightedDf(weighted).repartition(7)))
+      val srcs = Seq(0L, n / 2L)
+      val reversed = edges.map(_.swap)
+      for ((variant, e, w) <- variants) {
+        val cv = s"$c [$variant]"
+        val bfs = Graph.bfs(s, e, 0L).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        assert(bfs == bruteBfs(edges, 0L, 10), s"$cv bfs")
+
+        val keyed = Graph.frontier(e,
+            srcs.map(v => (v, v)).toDF("source", "id"),
+            Seq("source"), hops = 10, maxIter = 10)
+          .collect().groupBy(_.getLong(0))
+          .map { case (src, rows) =>
+            src -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap }
+        for (src <- srcs)
+          assert(keyed(src) == bruteBfs(edges, src, 10), s"$cv source $src")
+
+        // a key the edges carry: forward and reversed searches from 0
+        val tagged = e.select(lit("f").as("dir"), col("src"), col("dst"))
+          .unionByName(e.select(lit("r").as("dir"), col("dst").as("src"),
+            col("src").as("dst")))
+        val byDir = Graph.frontier(tagged,
+            Seq(("f", 0L), ("r", 0L)).toDF("dir", "id"), Seq("dir"),
+            maxIter = n)
+          .collect().groupBy(_.getString(0))
+          .map { case (dir, rows) =>
+            dir -> rows.map(r => r.getLong(1) -> r.getInt(2)).toMap }
+        assert(byDir("f") == bruteBfs(edges, 0L, n), s"$cv forward")
+        assert(byDir("r") == bruteBfs(reversed, 0L, n), s"$cv reversed")
+
+        // a shortest path has at most n - 1 edges, so round n improves
+        // nothing
+        val sssp = Graph.sssp(s, w, 0L, maxIter = n)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(sssp == bruteSssp(weighted, 0L), s"$cv sssp")
+      }
     }
   }
 

@@ -1,6 +1,10 @@
 package graft
 
 import graft.ops.Graph
+import org.apache.spark.GraftBus
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SCC correctness on known graphs + randomized cross-check against a
@@ -96,7 +100,7 @@ class SccSpec extends SparkSpec {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
       (9L, 10L)).toDF("src", "dst")
     val seeds = Seq((0L, 0L), (3L, 3L)).toDF("source", "id")
-    val keyed = ops.Graph.frontier(edges, Ckpt.stageCounted(seeds),
+    val keyed = ops.Graph.frontier(edges, seeds,
         Seq("source"), hops = 10, maxIter = 10)
       .collect().groupBy(_.getLong(0))
       .map { case (src, rows) =>
@@ -107,6 +111,55 @@ class SccSpec extends SparkSpec {
       assert(keyed(src) == single, s"source $src")
     }
     assert(keyed(3L) == Map(3L -> 0, 0L -> 1, 1L -> 2, 2L -> 2))
+  }
+
+  /** Spark jobs started and codegen classes compiled while `f` runs
+    * (the listener bus is drained before the job count is read). */
+  private def cost(f: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val count = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftBus.drain(sc)
+    sc.addSparkListener(count)
+    try {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      GraftBus.drain(sc)
+      (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    } finally sc.removeSparkListener(count)
+  }
+
+  test("frontier and SSSP rounds: one Spark job each, nothing " +
+    "recompiled on a repeat") {
+    import spark.implicits._
+    // cached and src-partitioned, the way the graph queries hold edges
+    def cachedBySrc(df: DataFrame) = {
+      val c = df.repartition(col("src")).cache()
+      c.count()
+      c
+    }
+    val edges = cachedBySrc(Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L),
+      (3L, 0L), (9L, 10L)).toDF("src", "dst"))
+    val weighted = cachedBySrc(weightedChain())
+    // every loop below runs three rounds, the last one finding nothing
+    // new: bfs {0} → {1,2} → {3} → {}; the keyed search from 3 goes
+    // {3} → {0} → {1,2} → {}; sssp improves 1, then 2, then nothing
+    val loops = Seq[(String, () => Unit)](
+      "bfs" -> (() => Graph.bfs(spark, edges, 0L).collect()),
+      "keyed frontier" -> (() => Graph.frontier(edges,
+        Seq((0L, 0L), (3L, 3L)).toDF("source", "id"), Seq("source"))
+        .collect()),
+      "sssp" -> (() => Graph.sssp(spark, weighted, 0L).collect()))
+    try for ((name, run) <- loops) {
+      val (jobs, _) = cost(run())
+      assert(jobs == 3, s"$name: $jobs jobs for 3 rounds")
+      val (again, compiled) = cost(run())
+      assert(again == 3, s"$name repeated: $again jobs for 3 rounds")
+      assert(compiled == 0, s"$name repeated: $compiled classes compiled")
+    } finally Seq(edges, weighted).foreach(_.unpersist())
   }
 
   /** 0 →(2) 1 →(3) 2: two productive relaxation rounds, then one
