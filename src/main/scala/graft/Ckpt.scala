@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** The lineage-truncation point for every iterative loop (SCC, WCC,
-  * k-core, k-truss, LPA, PageRank, FPS, incremental dedup, BPE rounds,
-  * …). One kind of state is not truncated here: the frontier and SSSP
-  * loops (`Graph.frontier`, `Graph.sssp`) keep their vertex state on
-  * the driver as plain collections, so they have no lineage to truncate
-  * and never reach [[stage]] or the reliable knob below.
+/** The lineage-truncation point for every iterative loop (WCC, k-core,
+  * k-truss, LPA, PageRank, FPS, incremental dedup, BPE rounds, …). One
+  * kind of state is not truncated here: the frontier, SSSP and SCC
+  * loops (`Graph.frontier`, `Graph.sssp`, `Graph.scc`) keep their
+  * vertex state on the driver as plain collections, so they have no
+  * lineage to truncate and never reach [[stage]] or the reliable knob
+  * below.
   *
   * Default: `localCheckpoint()` — blocks live in EXECUTOR storage
   * memory, truncation is free of any filesystem round-trip, and at
@@ -24,8 +25,8 @@ import org.apache.spark.sql.Dataset
   * instead of dying. The knob is one switch for all ~80 sites because
   * the correct choice is a property of the DEPLOYMENT, not of any one
   * operator; results are bit-identical either way (ReliableCkptSpec
-  * pins `k1_scc`/`k9_wcc` equality, and the A/B cost is recorded in
-  * PERF.md round-11).
+  * pins `k9_wcc` equality, and `k1_scc`'s, whose loop never stages; the
+  * A/B cost is recorded in PERF.md round-11).
   *
   * Every path stays EAGER (the Spark default for checkpoints): every
   * loop here counts or reuses the staged frame immediately, and eager
@@ -125,9 +126,9 @@ object Ckpt {
     * partial answer.
     *
     * FUSED WITNESS: a round reads its witness off its OWN staging action
-    * — a row count ([[stageCounted]]; for the driver-held frontier and
-    * SSSP loops, the size of the collection a round computed) or any
-    * other aggregate observed with `Dataset.observe` and read back by
+    * — a row count ([[stageCounted]]; for the driver-held frontier,
+    * SSSP and SCC loops, the size of the collection a round computed) or
+    * any other aggregate observed with `Dataset.observe` and read back by
     * [[observedLong]] — so loop control adds no probe job per round. The
     * witness must compare the round's OUTPUT with state already in
     * hand: certifying the round's input instead re-admits one redundant

@@ -12,8 +12,8 @@ object PlanProbe {
     // repeat where timings do not, so they expose latency-bound
     // queries — many small jobs at 8c/32c ratio ≈ 1 — even in a noisy
     // epoch. One exception: AQE's empty-relation propagation races
-    // query-stage completion, so a loop's first run can differ by a
-    // job (k1_scc 153 or 154 at sf0.1).
+    // query-stage completion, so the first run of a loop whose rounds
+    // run SQL joins and aggregates can differ by a job.
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

@@ -228,18 +228,38 @@ class GraphFuzzSpec extends SparkSpec {
     (0 until nGraphs).filter(_ % 5 == fam)
 
   test("fuzz: SCC matches brute-force mutual reachability") {
+    // each graph runs over five edge frames: as generated; with every
+    // edge doubled and a self-loop on every vertex; split into 1 and
+    // into 7 partitions; and with edges to and from ids >= n, outside
+    // the vertex set, which SCC must ignore (its oracle is the SCC of
+    // the induced edges)
     for (i <- indicesFor(0)) {
       val seed = baseSeed + i
-      // SCC's color fixpoint walks a cycle's full circumference per
-      // outer round — cap n to keep the deep-cycle cases fast
+      // SCC's colour propagation walks a cycle's full circumference,
+      // one round a hop, per outer peel — cap n to keep the deep-cycle
+      // cases fast
       val (n, edges) = gen(seed, maxN = 16)
       val c = ctx("scc", i, seed, n, edges.size)
       val s = spark
       import s.implicits._
       val v = (0L until n.toLong).toDF("v")
-      val got = Graph.scc(s, v, edgeDf(edges)).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == bruteScc(n, edges), c)
+      val selfLoops = (0L until n.toLong).map(v => (v, v))
+      // v → n + v → v + 1 would close one cycle through every vertex
+      val outside = (0L until n.toLong).flatMap(v =>
+        Seq((v, n + v), (n + v, (v + 1) % n)))
+      val induced = (edges ++ outside).filter { case (a, b) =>
+        a < n && b < n }
+      val variants = Seq(
+        ("as generated", edgeDf(edges), edges),
+        ("doubled, self-loops", edgeDf(edges ++ edges ++ selfLoops), edges),
+        ("1 partition", edgeDf(edges).repartition(1), edges),
+        ("7 partitions", edgeDf(edges).repartition(7), edges),
+        ("ids >= n", edgeDf(edges ++ outside), induced))
+      for ((variant, e, oracleEdges) <- variants) {
+        val got = Graph.scc(s, v, e).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == bruteScc(n, oracleEdges), s"$c [$variant]")
+      }
     }
   }
 

@@ -10,7 +10,10 @@ package graft
   * Pins: (1) the flagship iterative queries are BIT-IDENTICAL under
   * the reliable path — durability is a deployment property, never a
   * semantics change; (2) checkpoint files actually land under the
-  * configured directory (the knob routes, not just renames).
+  * configured directory (the knob routes, not just renames). k9_wcc's
+  * loop stages through [[Ckpt.stage]] and lands the files; k1_scc's
+  * keeps its vertex state on the driver and stages nothing, so for it
+  * the pin is the equality alone.
   */
 class ReliableCkptSpec extends SparkSpec {
 
@@ -46,14 +49,10 @@ class ReliableCkptSpec extends SparkSpec {
         s"no reliable checkpoint files under $dir — knob did not route")
     } finally {
       sys.props -= prop
-      // Evict the reliably-checkpointed SCC labeling BEFORE deleting
-      // its checkpoint dir: the cached frame's lineage roots at files
-      // under `dir`, so a later suite evicting/recomputing it would
-      // hit FileNotFoundException (r11 ADVICE). The knob flip itself
-      // is safe from cross-suite interference because the build runs
-      // forked tests sequentially (build.sbt pins
-      // `Test / testForkedParallel := false`).
-      Tables.evict(spark, s"scc|$sf")
+      // The knob flip is safe from cross-suite interference because the
+      // build runs forked tests sequentially (build.sbt pins
+      // `Test / testForkedParallel := false`). The memoized SCC labeling
+      // is a driver-built local relation, so no lineage roots at `dir`.
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(): Unit

@@ -144,22 +144,41 @@ class SccSpec extends SparkSpec {
     val edges = cachedBySrc(Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L),
       (3L, 0L), (9L, 10L)).toDF("src", "dst"))
     val weighted = cachedBySrc(weightedChain())
-    // every loop below runs three rounds, the last one finding nothing
-    // new: bfs {0} → {1,2} → {3} → {}; the keyed search from 3 goes
-    // {3} → {0} → {1,2} → {}; sssp improves 1, then 2, then nothing
-    val loops = Seq[(String, () => Unit)](
-      "bfs" -> (() => Graph.bfs(spark, edges, 0L).collect()),
-      "keyed frontier" -> (() => Graph.frontier(edges,
+    val cycleTail = cachedBySrc(
+      Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)).toDF("src", "dst"))
+    val verts = (0L until 4L).toDF("v").cache()
+    verts.count()
+    // bfs {0} → {1,2} → {3} → {}; the keyed search from 3 goes
+    // {3} → {0} → {1,2} → {}; sssp improves 1, then 2, then nothing:
+    // three rounds each, the last one finding nothing new. scc peels
+    // once: colours change {0}, then {1}, then nothing; the backward
+    // search from the roots {2, 3} admits {1}, then {0}, then nothing;
+    // one more job collects the vertex ids
+    val loops = Seq[(String, Int, () => Unit)](
+      ("bfs", 3, () => Graph.bfs(spark, edges, 0L).collect()),
+      ("keyed frontier", 3, () => Graph.frontier(edges,
         Seq((0L, 0L), (3L, 3L)).toDF("source", "id"), Seq("source"))
         .collect()),
-      "sssp" -> (() => Graph.sssp(spark, weighted, 0L).collect()))
-    try for ((name, run) <- loops) {
+      ("sssp", 3, () => Graph.sssp(spark, weighted, 0L).collect()),
+      ("scc", 3 + 3 + 1, () => Graph.scc(spark, verts, cycleTail)
+        .collect()))
+    try for ((name, want, run) <- loops) {
       val (jobs, _) = cost(run())
-      assert(jobs == 3, s"$name: $jobs jobs for 3 rounds")
+      assert(jobs == want, s"$name: $jobs jobs, want $want")
       val (again, compiled) = cost(run())
-      assert(again == 3, s"$name repeated: $again jobs for 3 rounds")
+      assert(again == want, s"$name repeated: $again jobs, want $want")
       assert(compiled == 0, s"$name repeated: $compiled classes compiled")
-    } finally Seq(edges, weighted).foreach(_.unpersist())
+    } finally Seq(edges, weighted, cycleTail, verts).foreach(_.unpersist())
+  }
+
+  test("a driver-held loop state over the row bound fails, naming the " +
+    "loop and the bound") {
+    Graph.checkDriverRows("toy loop", Graph.driverRowBound)
+    val e = intercept[IllegalStateException](
+      Graph.checkDriverRows("toy loop", Graph.driverRowBound + 1))
+    assert(e.getMessage.contains("toy loop"), e.getMessage)
+    assert(e.getMessage.contains(s"bound of ${Graph.driverRowBound}"),
+      e.getMessage)
   }
 
   /** 0 →(2) 1 →(3) 2: two productive relaxation rounds, then one

@@ -21,6 +21,10 @@
 #   sfDir  default /root/repo/scaledata/sf1
 #   query  default k9_wcc
 #
+# The query must stage its loop through Ckpt.stage. k1_scc does not: its
+# SCC loop keeps its vertex state on the driver and writes no checkpoint
+# file, so a k1_scc drill fails with "checkpoint never observed".
+#
 # Output: tools/recovery_drill_out/{baseline,kill}.json + PASS/FAIL on
 # stdout. Exit 0 iff both legs completed with identical hashes.
 set -euo pipefail
