@@ -5,10 +5,11 @@ import org.apache.spark.sql.Dataset
 /** The lineage-truncation point for every iterative loop (WCC, k-core,
   * k-truss, LPA, PageRank, FPS, incremental dedup, BPE rounds, …). One
   * kind of state is not truncated here: the frontier, SSSP and SCC
-  * loops (`Graph.frontier`, `Graph.sssp`, `Graph.scc`) keep their
-  * vertex state on the driver as plain collections, so they have no
-  * lineage to truncate and never reach [[stage]] or the reliable knob
-  * below.
+  * loops (`Graph.frontier`, `Graph.sssp`, `Graph.scc`) and the integer
+  * power iterations (`Inference.pcaPower`, `Graph.hits`,
+  * `Inference.alsRank1`) keep their state on the driver as plain
+  * collections, so they have no lineage to truncate and never reach
+  * [[stage]] or the reliable knob below.
   *
   * Default: `localCheckpoint()` — blocks live in EXECUTOR storage
   * memory, truncation is free of any filesystem round-trip, and at

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Single-pass Pearson correlation MATRIX over k numeric columns as one
   * `TypedImperativeAggregate`.
   *
-  * The composed form (28 independent `corr(a,b)` aggregates for k=8,
-  * `Stats.f8_corr_matrix`) keeps 6 accumulator slots per pair = 168
-  * doubles and re-reads each input column up to 7 times per row. This
+  * The composed form (28 independent `corr(a,b)` aggregates for k=8)
+  * keeps 6 accumulator slots per pair = 168 doubles and re-reads each
+  * input column up to 7 times per row. This
   * operator keeps the minimal sufficient statistics — count, k means,
   * k(k+1)/2 co-moments = 45 doubles for k=8 — reading each column once
   * per row. Same partial/merge contract as any Spark aggregate, so

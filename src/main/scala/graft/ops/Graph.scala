@@ -417,7 +417,9 @@ object Graph {
   }
 
   /** The most rows a loop may hold on the driver ([[frontier]]'s settled
-    * map, [[relax]]'s labels, [[scc]]'s vertex set). At ~150 bytes a
+    * map, [[relax]]'s labels, [[scc]]'s vertex set, and the entries the
+    * power iterations collect: [[hits]]' edges, `Inference.pcaPower`'s
+    * scatter and `Inference.alsRank1`'s ratings). At ~150 bytes a
     * boxed map entry this is ~300 MB, inside the smallest driver heap
     * the harness sets (2 GB); the capped graph holds at most 2000
     * vertices per search key.
@@ -445,6 +447,38 @@ object Graph {
     val from =
       udf((v: Long) => java.util.Arrays.binarySearch(sorted, v) >= 0)
     edges.filter(from(col("src"))).select(cols: _*).collect()
+  }
+
+  /** HITS on the driver over a directed `(src, dst)` edge list,
+    * collected once: `rounds` mutual-reinforcement rounds of
+    * [[Moments.matvec]] from the all-10⁶ hub vector, each score vector
+    * renormalized to sum 10¹². Returns the top-20 authorities and the
+    * top-20 hubs as `(role, id, score)`, ranked in Spark over
+    * `LocalRelation`s; no edges give no rows.
+    */
+  private[graft] def hits(edges: DataFrame, rounds: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    checkDriverRows("HITS edges", e.length)
+    val toDst = e.map { case (a, b) => (b, a, BigInt(1)) }
+    val toSrc = e.map { case (a, b) => (a, b, BigInt(1)) }
+    def norm(u: Map[Long, BigInt]) = {
+      val by = u.values.sum
+      u.map { case (k, x) => k -> BigInt(Moments.renorm(x, 1e12, by)) }
+    }
+    val h0 = e.map(_._1).distinct.map(_ -> BigInt(1000000)).toMap
+    val (a, h) = (1 to rounds).foldLeft((Map.empty[Long, BigInt], h0)) {
+      case ((_, h), _) =>
+        val a = norm(Moments.matvec(toDst, h))
+        (a, norm(Moments.matvec(toSrc, a)))
+    }
+    def top(role: String, m: Map[Long, BigInt]) =
+      Moments.local(edges.sparkSession, "id BIGINT, score BIGINT",
+          m.toSeq.map { case (k, x) => (k, x.toLong) })
+        .orderBy(desc("score"), col("id")).limit(20)
+        .select(lit(role).as("role"), col("id"), col("score"))
+    top("auth", a).unionByName(top("hub", h))
+      .orderBy(col("role"), desc("score"), col("id"))
   }
 
   private def cappedEdges(s: SparkSession, d: String): DataFrame =
@@ -892,52 +926,19 @@ object Graph {
     // order→part purchase graph a high AUTHORITY is a part bought
     // across many well-connected orders and a high HUB an order that
     // touches many authoritative parts. Three mutual-reinforcement
-    // rounds, each two shuffles (a: groupBy dst, h: groupBy src over
-    // the src-cached edge table) + a broadcast 1-row normalizing
-    // capsule, lineage cut per round — the k3 loop shape. Exactness:
-    // instead of Kleinberg's L2 normalization (a global FLOAT sum —
-    // order-dependent across engines), scores live on an integer
-    // grid: each round's raw score is an exact BIGINT sum of the
-    // previous integer vector, and renormalization floors the
-    // identical double division a·10¹²/Σa on both engines — so every
-    // iterate is an exact integer vector and no float aggregate ever
-    // feeds a comparison (sum-normalized HITS converges to the same
-    // principal eigenvectors; Kleinberg §3 notes the normalization
-    // choice is free). Output: top-20 authorities + top-20 hubs,
-    // score-desc with id tie-break.
+    // rounds over the capped edges, collected once and iterated on the
+    // driver (see [[hits]]). Exactness: instead of Kleinberg's L2
+    // normalization (a global FLOAT sum — order-dependent across
+    // engines), scores live on an integer grid: each round's raw score
+    // is an exact integer sum of the previous integer vector, and
+    // renormalization floors the identical double division a·10¹²/Σa
+    // on both engines — so every iterate is an exact integer vector
+    // and no float aggregate ever feeds a comparison (sum-normalized
+    // HITS converges to the same principal eigenvectors; Kleinberg §3
+    // notes the normalization choice is free). Output: top-20
+    // authorities + top-20 hubs, score-desc with id tie-break.
     Q("k22_hits",
-      (s, d) => {
-        val edges = cappedDistinctBySrc(s, d)
-        var h = edges.select(col("src")).distinct()
-          .select(col("src"), lit(1000000L).as("h"))
-        var a: DataFrame = null
-        for (_ <- 1 to 3) {
-          val a1 = edges.join(h, Seq("src"))
-            .groupBy("dst").agg(sum(col("h")).as("a1"))
-          val sa = a1.groupBy().agg(sum(col("a1")).as("sa"))
-          a = a1.crossJoin(broadcast(sa))
-            .select(col("dst"),
-              floor(col("a1").cast("double") * 1000000000000.0 /
-                col("sa").cast("double")).cast("long").as("a"))
-            .stageCkpt()
-          val h1 = edges.join(a, Seq("dst"))
-            .groupBy("src").agg(sum(col("a")).as("h1"))
-          val sh = h1.groupBy().agg(sum(col("h1")).as("sh"))
-          h = h1.crossJoin(broadcast(sh))
-            .select(col("src"),
-              floor(col("h1").cast("double") * 1000000000000.0 /
-                col("sh").cast("double")).cast("long").as("h"))
-            .stageCkpt()
-        }
-        val topA = a.orderBy(desc("a"), col("dst")).limit(20)
-          .select(lit("auth").as("role"), col("dst").as("id"),
-            col("a").as("score"))
-        val topH = h.orderBy(desc("h"), col("src")).limit(20)
-          .select(lit("hub").as("role"), col("src").as("id"),
-            col("h").as("score"))
-        topA.unionByName(topH)
-          .orderBy(col("role"), desc("score"), col("id"))
-      },
+      (s, d) => hits(cappedDistinctBySrc(s, d), 3),
       Some(hitsOracle(3))),
 
     // ----- K23: random-walk corpus sampling (the DeepWalk/node2vec
@@ -2031,11 +2032,11 @@ object Graph {
     // endpoint degrees (the edge table and the degree table both key
     // on the vertex — two keyed joins, the k15 degree-attach shape),
     // then a single 4-sum aggregate. Over the symmetric list Σx = Σy
-    // and Σx² = Σy², so r = (Se·Σxy − (Σx)²) / (Se·Σx² − (Σx)²) with
-    // every sum BIGINT-exact on the capped graph (at 100 TB the sums
-    // are Σd³-scale — the production move is the same formula over
-    // DECIMAL(38) partial aggregates, same plan shape). The only
-    // floats are the final two exact-integer divisions.
+    // and Σx² = Σy², so r = (Se·Σxy − (Σx)²) / (Se·Σx² − (Σx)²): two
+    // exact co-moments over sums that are BIGINT-exact on the capped
+    // graph (at 100 TB the sums are Σd³-scale — the production move is
+    // the same formula over DECIMAL(38) partial aggregates, same plan
+    // shape). The only float is the final exact-integer division.
     Q("k18_assortativity",
       (s, d) => {
         val und = cappedEdges(s, d)
@@ -2057,10 +2058,10 @@ object Graph {
             sum(col("x")).as("sx"),
             sum(col("x") * col("x")).as("sxx"))
           .select(col("se"), col("sxy"), col("sx"), col("sxx"),
-            ((col("se") * col("sxy") - col("sx") * col("sx"))
+            (Moments.comoment(col("se"), col("sx"), col("sx"), col("sxy"))
               .cast("double") /
-              (col("se") * col("sxx") - col("sx") * col("sx")))
-              .as("assortativity"))
+              Moments.comoment(col("se"), col("sx"), col("sx"), col("sxx"))
+                .cast("double")).as("assortativity"))
       },
       Some(
         s"""WITH und AS (

@@ -2,9 +2,11 @@ package graft.ops
 
 import graft.Ckpt.StageOps
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import graft.ops.Moments.exact
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 
 /** Rank statistics, robust estimators, resampling, and spectral
   * decomposition — the inference layer a corpus pipeline runs on top of
@@ -15,8 +17,10 @@ import org.apache.spark.sql.functions._
   * robust location/scale the outlier gates should have used, the
   * bootstrap attaches uncertainty to any released mean, and the power
   * iteration extracts the dominant covariance direction from the
-  * embedding table without ever materializing a dense matrix on one
-  * machine. Reference behavior spec: the correlation-analysis job
+  * embedding table: one aggregate builds the exact 64×64 scatter matrix,
+  * collected once, and the iterations run on the driver (as do k22's
+  * HITS and the rank-1 ALS: [[Moments]] holds their shared integer
+  * algebra). Reference behavior spec: the correlation-analysis job
   * (`analysis/correlation_analysis.py:1-142`) computes product-moment
   * correlations; this module is the rank/robust/resampling completion
   * of that surface. Published forms: Spearman 1904; Kendall 1938
@@ -90,18 +94,12 @@ object Inference {
         val m = ranked.groupBy("flag").agg(
           count(lit(1)).as("n"),
           sum(col("r2x")).as("sx"), sum(col("r2y")).as("sy"),
-          sum((col("r2x") * col("r2y")).cast("decimal(38,0)")).as("sxy"),
-          sum((col("r2x") * col("r2x")).cast("decimal(38,0)")).as("sxx"),
-          sum((col("r2y") * col("r2y")).cast("decimal(38,0)")).as("syy"))
-        def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+          sum(exact(col("r2x") * col("r2y"))).as("sxy"),
+          sum(exact(col("r2x") * col("r2x"))).as("sxx"),
+          sum(exact(col("r2y") * col("r2y"))).as("syy"))
         m.select(col("flag").as("l_returnflag"), col("n"),
-            round((dec(col("n")) * col("sxy") -
-                dec(col("sx")) * dec(col("sy"))).cast("double") /
-              (sqrt((dec(col("n")) * col("sxx") -
-                  dec(col("sx")) * dec(col("sx"))).cast("double")) *
-               sqrt((dec(col("n")) * col("syy") -
-                  dec(col("sy")) * dec(col("sy"))).cast("double"))), 4)
-              .as("rho"))
+            round(Moments.pearson(col("n"), col("sx"), col("sy"),
+              col("sxy"), col("sxx"), col("syy")), 4).as("rho"))
           .orderBy("l_returnflag")
       },
       Some(
@@ -191,8 +189,7 @@ object Inference {
         // stay BIGINT (pair counts ≤ n²/2 fit to n ≈ 4.3e9/group;
         // beyond that the output schema itself would need DECIMAL).
         def half(c: org.apache.spark.sql.Column) =
-          (c.cast("decimal(38,0)") * (c - 1L) / 2L)
-            .cast("decimal(38,0)")
+          exact(exact(c) * (c - 1L) / 2L)
         val margx = li.groupBy("flag", "x").agg(count(lit(1)).as("t"))
           .groupBy("flag")
           .agg(sum(half(col("t"))).as("n1"), sum(col("t")).as("n"))
@@ -285,21 +282,20 @@ object Inference {
           // overflows once a single (event_type, value) cell holds
           // over ~2.1M rows, while the oracle cubes in HUGEINT; the
           // decimal(38,0) product mirrors it exactly (round-6 ADVICE)
-          sum(col("t").cast("decimal(38,0)") * col("t") * col("t") -
-            col("t")).cast("decimal(38,0)").as("tcorr"))
-        def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+          exact(sum(exact(col("t")) * col("t") * col("t") - col("t")))
+            .as("tcorr"))
         val n = col("n1") + col("n2")
         val u2 = lit(2L) * col("n1") * col("n2") +
           col("n1") * (col("n1") + 1L) - col("r2a")
-        val dev = dec(u2 - col("n1") * col("n2"))
-        val vTerm = dec(n) * dec(n - 1L) * dec(n + 1L) - col("tcorr")
+        val dev = exact(u2 - col("n1") * col("n2"))
+        val vTerm = exact(n) * exact(n - 1L) * exact(n + 1L) - col("tcorr")
         m.select(col("event_type"), col("n1"), col("n2"),
             u2.as("u2"),
-            (dec(lit(1875L)) * dec(n) * dec(n - 1L) * dev * dev >
-              dec(lit(2401L)) * dec(col("n1")) * dec(col("n2")) * vTerm)
-              .as("reject_05"),
+            (exact(lit(1875L)) * exact(n) * exact(n - 1L) * dev * dev >
+              exact(lit(2401L)) * exact(col("n1")) * exact(col("n2")) *
+                vTerm).as("reject_05"),
             round(dev.cast("double") /
-              sqrt((dec(col("n1")) * dec(col("n2")) * vTerm)
+              sqrt((exact(col("n1")) * exact(col("n2")) * vTerm)
                   .cast("double") /
                 (lit(3.0) * (n * (n - 1L)).cast("double"))), 4)
               .as("z"))
@@ -556,15 +552,15 @@ object Inference {
           |ORDER BY event_type""".stripMargin)),
 
     // ----- Dominant covariance direction of the embedding table by
-    // power iteration — distributed PCA without ever holding a dense
-    // matrix anywhere: the 64×64 scatter matrix is ONE map-side-
-    // combinable self-join aggregation over the exploded vectors
-    // (shuffle key cardinality = dim² = 4096, independent of corpus
-    // size — at 100 TB this is the standard one-pass Gram build), and
-    // each of the 6 iterations is a broadcast-tiny matvec over that
-    // 4096-row frame. Exactness: embeddings floor-quantized to e3
-    // integers; the CENTERED scatter S = n·Σxᵢxⱼ − Σxᵢ·Σxⱼ is exact
-    // BIGINT; matvec accumulators run in DECIMAL(38,0)/HUGEINT; each
+    // power iteration — distributed PCA: the 64×64 scatter matrix is
+    // ONE map-side-combinable aggregation over each row's dim² pairs
+    // (a second posexplode inside the row; shuffle key cardinality =
+    // dim² = 4096, independent of corpus size — at 100 TB this is the
+    // standard one-pass Gram build), collected once; the 6 iterations
+    // then run on the driver over those 4096 entries. Exactness:
+    // embeddings floor-quantized to e3 integers; the CENTERED scatter
+    // S = n·Σxᵢxⱼ − Σxᵢ·Σxⱼ is an exact co-moment; matvec accumulators
+    // are exact (BigInt on the driver, HUGEINT in the oracle); each
     // iterate renormalizes to ‖v‖∞ = 10⁶ by a floor of the identical
     // double division on both engines (floor of a bitwise-identical
     // double — tie-free, the SURVEY §5 rule), so every iterate is an
@@ -572,68 +568,9 @@ object Inference {
     // CONSTRUCTION — convergence rate depends on the eigengap (this
     // isotropic fixture barely has one) but the reported iterate is
     // deterministic arithmetic either way. λ is the Rayleigh quotient
-    // of the final iterate, one exact-integer ratio rounded 4dp.
+    // of the final iterate, one exact-integer ratio rounded in Spark.
     Q("m_pca_power",
-      (s, d) => {
-        // NOT staged (probed round-12): the Gram self-join's two sides
-        // are IDENTICAL subplans, so ReuseExchange already shares one
-        // shuffle of the exploded table (the before-plan carried just
-        // 6 Exchanges); a localCheckpoint here only added its own
-        // materialization pass and cost stats the planner had
-        val ex = Tables.embeddings(s, d)
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).cast("long").as("i"),
-            floor(col("col").cast("double") * 1000.0).cast("long")
-              .as("q"))
-        val n = ex.groupBy().agg(
-          (count(lit(1)) / 64L).as("n")).select(col("n").cast("long"))
-        val sums = ex.groupBy("i").agg(sum("q").as("si"))
-        val gram = ex.as("a")
-          .join(ex.select(col("vec_id"), col("i").as("j"),
-            col("q").as("qj")).as("b"), Seq("vec_id"))
-          .groupBy("i", "j").agg(sum(col("q") * col("qj")).as("g"))
-        val scat = gram
-          .join(broadcast(sums), Seq("i"))
-          .join(broadcast(sums.select(col("i").as("j"),
-            col("si").as("sj"))), Seq("j"))
-          .crossJoin(broadcast(n.toDF("n")))
-          .select(col("i"), col("j"),
-            (col("n") * col("g") - col("si") * col("sj")).as("sij"))
-          .stageCkpt()
-        var v = scat.select(col("i")).distinct()
-          .select(col("i"), lit(1000000L).as("v"))
-        for (_ <- 1 to 6) {
-          val u = scat.join(broadcast(v.select(col("i").as("j"),
-              col("v").as("vj"))), Seq("j"))
-            .groupBy("i")
-            .agg(sum(col("sij").cast("decimal(38,0)") * col("vj"))
-              .as("u"))
-          val mx = u.groupBy().agg(max(abs(col("u"))).as("m"))
-          v = u.crossJoin(broadcast(mx))
-            .select(col("i"),
-              floor(col("u").cast("double") * 1000000.0 /
-                col("m").cast("double")).cast("long").as("v"))
-            .stageCkpt()
-        }
-        val lamNum = scat.join(broadcast(v.select(col("i").as("j"),
-            col("v").as("vj"))), Seq("j"))
-          .join(broadcast(v), Seq("i"))
-          .groupBy().agg(sum(col("sij").cast("decimal(38,0)") *
-            col("vj") * col("v")).as("num"))
-        val lamDen = v.groupBy()
-          .agg(sum(col("v") * col("v")).as("den"))
-        // lambda rendered round(-3): num is an exact DECIMAL(38,0)
-        // ~1e26 at sf1, so the decimal->double CAST itself rounds and
-        // the engines differ by one ulp (~1e-3 at lambda ~7.7e12) —
-        // a 4dp grid can't even be represented there. Thousands are
-        // exactly representable far past any fixture scale, and the
-        // ulp can't flip a 500-boundary.
-        v.crossJoin(broadcast(lamNum)).crossJoin(broadcast(lamDen))
-          .select(col("i"), col("v").as("v_e6"),
-            round(col("num").cast("double") / col("den").cast("double"),
-              -3).as("lambda_scat"))
-          .orderBy("i")
-      },
+      (s, d) => pcaPower(pcaScatter(s, d), 6),
       Some(pcaPowerOracle(6))),
 
     // ----- Multivariate OLS by exact normal equations — the linear
@@ -641,11 +578,12 @@ object Inference {
     // every feature pipeline eventually fits, done the distributed
     // way: ONE map-side-combinable pass accumulates the 9 moment sums
     // (X'X and X'y entries — all exact integers from floor-quantized
-    // inputs), and the 3×3 system is solved in closed form by
-    // Cramer's rule with determinants expanded in DECIMAL(38,0)/
-    // HUGEINT (cofactor products stay under 10²⁸ at any tested SF;
-    // at true warehouse scale you would center the regressors first
-    // to shrink the determinant magnitudes — noted, not needed here).
+    // inputs; [[Moments.normalSums]]), and the 3×3 system is solved in
+    // closed form by Cramer's rule ([[Moments.cramer]]) with
+    // determinants expanded in DECIMAL(38,0)/HUGEINT (cofactor
+    // products stay under 10²⁸ at any tested SF; at true warehouse
+    // scale you would center the regressors first to shrink the
+    // determinant magnitudes — noted, not needed here).
     // Coefficients are one exact-integer ratio each; R² folds the
     // exact determinants into a single identically-associated double
     // expression (its exact-integer numerator det·Σy² would exceed
@@ -659,30 +597,11 @@ object Inference {
           floor(col("l_extendedprice") * 100.0).cast("long").as("yv"),
           floor(col("l_quantity")).cast("long").as("x1"),
           floor(col("l_discount") * 100.0).cast("long").as("x2"))
-        val m = li.groupBy("flag").agg(
-          count(lit(1)).as("n"),
-          sum("x1").as("s1"), sum("x2").as("s2"),
-          sum(col("x1") * col("x1")).as("s11"),
-          sum(col("x1") * col("x2")).as("s12"),
-          sum(col("x2") * col("x2")).as("s22"),
-          sum("yv").as("sy"),
-          sum(col("x1") * col("yv")).as("s1y"),
-          sum(col("x2") * col("yv")).as("s2y"),
-          sum((col("yv") * col("yv")).cast("decimal(38,0)")).as("syy"))
-        def dc(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-        def det3(a: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
-          dc(a(0)) * (dc(a(4)) * dc(a(8)) - dc(a(5)) * dc(a(7))) -
-          dc(a(1)) * (dc(a(3)) * dc(a(8)) - dc(a(5)) * dc(a(6))) +
-          dc(a(2)) * (dc(a(3)) * dc(a(7)) - dc(a(4)) * dc(a(6)))
-        val (n, s1, s2, s11, s12, s22, sy, s1y, s2y) =
-          (col("n"), col("s1"), col("s2"), col("s11"), col("s12"),
-            col("s22"), col("sy"), col("s1y"), col("s2y"))
-        val detA = det3(Seq(n, s1, s2, s1, s11, s12, s2, s12, s22))
-        val d0 = det3(Seq(sy, s1, s2, s1y, s11, s12, s2y, s12, s22))
-        val d1 = det3(Seq(n, sy, s2, s1, s1y, s12, s2, s2y, s22))
-        val d2 = det3(Seq(n, s1, sy, s1, s11, s1y, s2, s12, s2y))
-        val (detD, d0D, d1D, d2D) = (detA.cast("double"),
-          d0.cast("double"), d1.cast("double"), d2.cast("double"))
+        val sums = Moments.normalSums(col("yv"), col("x1"), col("x2"))
+        val m = li.groupBy("flag").agg(sums.head, sums.tail :+
+          sum(exact(col("yv") * col("yv"))).as("syy"): _*)
+        val Seq(detD, d0D, d1D, d2D) = Moments.cramer.map(_.cast("double"))
+        val (n, sy, s1y, s2y) = (col("n"), col("sy"), col("s1y"), col("s2y"))
         val sse = col("syy").cast("double") -
           (d0D * sy.cast("double") + d1D * s1y.cast("double") +
             d2D * s2y.cast("double")) / detD
@@ -831,68 +750,22 @@ object Inference {
     // the Spark-canonical collaborative-filtering workload) over the
     // order×part quantity matrix: alternate u_i = Σr·v/Σv² (per
     // order, over its observed parts) and v_j = Σr·u/Σu² for two full
-    // rounds from a constant v₀. Each half-step is ONE equi-join of
-    // the ratings table with the broadcast-size factor vector plus a
-    // key-local aggregate — the exact plan shape of MLlib's ALS with
-    // k = 1, minus the block solvers. Engine-exactness on the k22
-    // integer grid: factors live at e6 fixed point, every Σr·v and
-    // Σv² accumulates exactly (DECIMAL(38,0) where products exceed
-    // 2⁶³), and each half-step floors the identical double division
-    // 10¹²·num/den — so both engines walk the same integer iterate
-    // sequence. The fit report (RMSE) squares e6-truncated residuals
-    // so its sum stays exact at any corpus size instead of riding an
-    // order-dependent float aggregation. Output: top-10 factors per
-    // side + the global reconstruction RMSE.
+    // rounds from a constant v₀. The capped ratings are collected once
+    // and each half-step runs on the driver (see [[alsRank1]]).
+    // Engine-exactness on the k22 integer grid: factors live at e6
+    // fixed point, every Σr·v and Σv² accumulates exactly (BigInt on
+    // the driver, HUGEINT in the oracle), and each half-step floors
+    // the identical double division 10¹²·num/den — so both engines
+    // walk the same integer iterate sequence. The fit report (RMSE)
+    // squares e6-truncated residuals so its sum stays exact at any
+    // corpus size instead of riding an order-dependent float
+    // aggregation. Output: top-10 factors per side + the global
+    // reconstruction RMSE.
     Q("m_als_rank1",
-      (s, d) => {
-        val r = Tables.lineitem(s, d)
-          .filter(col("l_orderkey") < 2000 && col("l_partkey") < 2000)
-          .groupBy(col("l_orderkey").as("i"), col("l_partkey").as("j"))
-          .agg(sum(floor(col("l_quantity")).cast("long")).as("r"))
-          .stageCkpt()
-        def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-        // one ALS half-step: given factors f on side `by`, solve the
-        // other side `out`: floor(1e12 * sum(r*f) / sum(f^2))
-        def halfStep(f: DataFrame, by: String, out: String): DataFrame =
-          r.join(broadcast(f), Seq(by))
-            .groupBy(col(out))
-            .agg(sum(dec(col("r")) * col("f")).as("num"),
-              sum(dec(col("f")) * col("f")).as("den"))
-            .select(col(out),
-              floor(col("num").cast("double") * 1000000000000.0 /
-                col("den").cast("double")).cast("long").as("f"))
-            .stageCkpt()
-        var v = r.select(col("j")).distinct()
-          .select(col("j"), lit(1000000L).as("f"))
-        var u: DataFrame = null
-        for (_ <- 1 to 2) {
-          u = halfStep(v, "j", "i")
-          v = halfStep(u, "i", "j")
-        }
-        val rmse = r.join(broadcast(u.select(col("i"), col("f").as("fu"))),
-            Seq("i"))
-          .join(broadcast(v.select(col("j"), col("f").as("fv"))),
-            Seq("j"))
-          // residual truncated to e6 units via a floor of the identical
-          // double division (never BIGINT `div`: Spark truncates toward
-          // zero where DuckDB's `//` floors — they disagree on negative
-          // residuals), so the squared sum is exact and order-free
-          .select(floor((col("r") * 1000000000000L -
-              col("fu") * col("fv")).cast("double") / 1000000.0)
-            .cast("long").as("d6"))
-          .agg(round(
-            sqrt(sum(dec(col("d6")) * col("d6")).cast("double") /
-              count(lit(1)).cast("double")) / 1000000.0, 4)
-            .as("rmse"))
-        val topU = u.orderBy(desc("f"), col("i")).limit(10)
-          .select(lit("order").as("role"), col("i").as("id"),
-            col("f").as("factor_e6"))
-        val topV = v.orderBy(desc("f"), col("j")).limit(10)
-          .select(lit("part").as("role"), col("j").as("id"),
-            col("f").as("factor_e6"))
-        topU.unionByName(topV).crossJoin(broadcast(rmse))
-          .orderBy(col("role"), desc("factor_e6"), col("id"))
-      },
+      (s, d) => alsRank1(Tables.lineitem(s, d)
+        .filter(col("l_orderkey") < 2000 && col("l_partkey") < 2000)
+        .groupBy(col("l_orderkey").as("i"), col("l_partkey").as("j"))
+        .agg(sum(floor(col("l_quantity")).cast("long")).as("r")), 2),
       Some(alsOracle(2))),
 
     // ----- Calibration / reliability readout (Murphy 1973 Brier
@@ -981,32 +854,12 @@ object Inference {
           floor(col("l_quantity")).cast("long").as("x1"),
           floor(col("l_discount") * 100.0).cast("long").as("x2"))
           .stageCkpt()
-        val m = li.filter(col("train")).groupBy("flag").agg(
-          count(lit(1)).as("n_train"),
-          sum("x1").as("s1"), sum("x2").as("s2"),
-          sum(col("x1") * col("x1")).as("s11"),
-          sum(col("x1") * col("x2")).as("s12"),
-          sum(col("x2") * col("x2")).as("s22"),
-          sum("yv").as("sy"),
-          sum(col("x1") * col("yv")).as("s1y"),
-          sum(col("x2") * col("yv")).as("s2y"))
-        def dc(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-        def det3(a: Seq[org.apache.spark.sql.Column]) =
-          dc(a(0)) * (dc(a(4)) * dc(a(8)) - dc(a(5)) * dc(a(7))) -
-          dc(a(1)) * (dc(a(3)) * dc(a(8)) - dc(a(5)) * dc(a(6))) +
-          dc(a(2)) * (dc(a(3)) * dc(a(7)) - dc(a(4)) * dc(a(6)))
-        val (n, s1, s2, s11, s12, s22, sy, s1y, s2y) =
-          (col("n_train"), col("s1"), col("s2"), col("s11"),
-            col("s12"), col("s22"), col("sy"), col("s1y"), col("s2y"))
-        val fit = m.select(col("flag"), col("n_train"),
-          det3(Seq(n, s1, s2, s1, s11, s12, s2, s12, s22))
-            .cast("double").as("deta"),
-          det3(Seq(sy, s1, s2, s1y, s11, s12, s2y, s12, s22))
-            .cast("double").as("d0"),
-          det3(Seq(n, sy, s2, s1, s1y, s12, s2, s2y, s22))
-            .cast("double").as("d1"),
-          det3(Seq(n, s1, sy, s1, s11, s1y, s2, s12, s2y))
-            .cast("double").as("d2"))
+        val sums = Moments.normalSums(col("yv"), col("x1"), col("x2"))
+        val m = li.filter(col("train")).groupBy("flag")
+          .agg(sums.head, sums.tail: _*)
+        val Seq(deta, d0, d1, d2) = Moments.cramer.map(_.cast("double"))
+        val fit = m.select(col("flag"), col("n").as("n_train"),
+          deta.as("deta"), d0.as("d0"), d1.as("d1"), d2.as("d2"))
         val cal = li.filter(!col("train"))
           .join(broadcast(fit), Seq("flag"))
           .select(col("flag"), col("n_train"),
@@ -1261,6 +1114,111 @@ object Inference {
           |FROM q CROSS JOIN prior p
           |ORDER BY q.user_id""".stripMargin)),
   )
+
+  /** The m_pca_power scatter matrix `(i, j, sij)`: the exact co-moment
+    * n·Σqᵢqⱼ − Σqᵢ·Σqⱼ of the e3-quantized embedding dims, symmetric
+    * in (i, j). A second posexplode inside each row yields its dim²
+    * pairs, and the (i, j) aggregate combines them map-side, below its
+    * 4096-key shuffle: no self-join, no |N|·dim² shuffled rows. */
+  private[graft] def pcaScatter(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(transform(col("embedding"),
+        x => floor(x.cast("double") * 1000.0).cast("long")).as("q"))
+      .select(col("q"), posexplode(col("q")).as(Seq("pi", "qi")))
+      .select(col("pi"), col("qi"), posexplode(col("q")).as(Seq("pj", "qj")))
+      .groupBy((col("pi") + 1).cast("long").as("i"),
+        (col("pj") + 1).cast("long").as("j"))
+      .agg(count(lit(1)).as("n"), sum("qi").as("si"), sum("qj").as("sj"),
+        sum(col("qi") * col("qj")).as("g"))
+      .select(col("i"), col("j"),
+        Moments.comoment(col("n"), col("si"), col("sj"), col("g"))
+          .as("sij"))
+
+  /** Power iteration on the driver over a `(i, j, sij)` scatter,
+    * collected once: `iters` rounds of [[Moments.matvec]] from the
+    * all-10⁶ vector, each renormalized to ‖v‖∞ = 10⁶, then the Rayleigh
+    * quotient of the last iterate. Returns `(i, v_e6, lambda_scat)`;
+    * an empty scatter gives no rows.
+    */
+  private[graft] def pcaPower(scat: DataFrame, iters: Int): DataFrame = {
+    val m = scat.select(col("i"), col("j"), col("sij")).collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        BigInt(r.getDecimal(2).toBigInteger)))
+    Graph.checkDriverRows("PCA scatter", m.length)
+    val v0 = m.map(_._1).distinct.map(_ -> BigInt(1000000)).toMap
+    val v = (1 to iters).foldLeft(v0) { (v, _) =>
+      val u = Moments.matvec(m, v)
+      u.values.map(_.abs).maxOption.fold(u)(by =>
+        u.map { case (i, x) => i -> BigInt(Moments.renorm(x, 1e6, by)) })
+    }
+    val num = Moments.matvec(m, v)
+      .collect { case (i, x) if v.contains(i) => x * v(i) }.sum
+    val den = v.values.map(x => x * x).sum
+    val lam = Decimal(num).toDouble / Decimal(den).toDouble
+    // lambda rendered round(-3): num is an exact integer ~1e26 at sf1,
+    // so its conversion to double itself rounds and the engines differ
+    // by one ulp (~1e-3 at lambda ~7.7e12) — a 4dp grid can't even be
+    // represented there. Thousands are exactly representable far past
+    // any fixture scale, and the ulp can't flip a 500-boundary.
+    Moments.local(scat.sparkSession, "i BIGINT NOT NULL, v_e6 BIGINT, " +
+        "lam DOUBLE", v.toSeq.map { case (i, x) => (i, x.toLong, lam) })
+      .select(col("i"), col("v_e6"), round(col("lam"), -3).as("lambda_scat"))
+      .orderBy("i")
+  }
+
+  /** Rank-1 ALS on the driver over `(i, j, r)` ratings, collected once:
+    * `rounds` pairs of half-steps from the all-10⁶ part factors, each
+    * solving one side's factor as floor(10¹²·Σr·f / Σf²) over its
+    * observed ratings. The RMSE, the top-10 per side and their union
+    * run as one Spark plan over `LocalRelation`s of the ratings and the
+    * two factor vectors; empty ratings give no rows.
+    */
+  private[graft] def alsRank1(ratings: DataFrame, rounds: Int): DataFrame = {
+    val s = ratings.sparkSession
+    val r = ratings.select(col("i"), col("j"), col("r")).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+    Graph.checkDriverRows("ALS ratings", r.length)
+    // (solved side, given side, rating) entries for each half-step
+    val byPart = r.map { case (i, j, x) => (i, j, BigInt(x)) }
+    val byOrder = r.map { case (i, j, x) => (j, i, BigInt(x)) }
+    def halfStep(rs: Iterable[(Long, Long, BigInt)], f: Map[Long, BigInt]) = {
+      val num = Moments.matvec(rs, f)
+      val den = Moments.matvec(rs.map { case (o, g, _) => (o, g, BigInt(1)) },
+        f.map { case (k, x) => k -> x * x })
+      num.map { case (o, x) => o -> BigInt(Moments.renorm(x, 1e12, den(o))) }
+    }
+    val v0 = r.map(_._2).distinct.map(_ -> BigInt(1000000)).toMap
+    val (u, v) = (1 to rounds).foldLeft((Map.empty[Long, BigInt], v0)) {
+      case ((_, v), _) =>
+        val u = halfStep(byPart, v)
+        (u, halfStep(byOrder, u))
+    }
+    def factors(f: Map[Long, BigInt], key: String) = Moments.local(s,
+      s"$key BIGINT, f BIGINT", f.toSeq.map { case (k, x) => (k, x.toLong) })
+    val (uf, vf) = (factors(u, "i"), factors(v, "j"))
+    val rmse = Moments.local(s, "i BIGINT, j BIGINT, r BIGINT", r.toSeq)
+      .join(uf.select(col("i"), col("f").as("fu")), Seq("i"))
+      .join(vf.select(col("j"), col("f").as("fv")), Seq("j"))
+      // residual truncated to e6 units via a floor of the identical
+      // double division (never BIGINT `div`: Spark truncates toward
+      // zero where DuckDB's `//` floors — they disagree on negative
+      // residuals), so the squared sum is exact and order-free
+      .select(floor((col("r") * 1000000000000L -
+          col("fu") * col("fv")).cast("double") / 1000000.0)
+        .cast("long").as("d6"))
+      .agg(round(
+        sqrt(sum(exact(col("d6")) * col("d6")).cast("double") /
+          count(lit(1)).cast("double")) / 1000000.0, 4)
+        .as("rmse"))
+    val topU = uf.orderBy(desc("f"), col("i")).limit(10)
+      .select(lit("order").as("role"), col("i").as("id"),
+        col("f").as("factor_e6"))
+    val topV = vf.orderBy(desc("f"), col("j")).limit(10)
+      .select(lit("part").as("role"), col("j").as("id"),
+        col("f").as("factor_e6"))
+    topU.unionByName(topV).crossJoin(rmse)
+      .orderBy(col("role"), desc("factor_e6"), col("id"))
+  }
 
   /** Unrolled rank-1 ALS oracle: ratings + each half-step factor
     * vector as MATERIALIZED CTEs (every factor table is referenced by

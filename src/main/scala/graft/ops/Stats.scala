@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Oracles, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Correlation) purely as carriers; everything decomposes into hash
   * aggregates and column arithmetic, which Catalyst whole-stage-codegens —
   * so no MLlib here. The correlation matrix is ONE aggregate pass computing
-  * all 28 `corr(a,b)` pairs (the reference's `Correlation.corr` also does a
+  * all 28 Pearson pairs (the reference's `Correlation.corr` also does a
   * single pass; 28 independent jobs would scan 28×).
   */
 object Stats {
@@ -20,6 +20,52 @@ object Stats {
     * (correlation_analysis.py:90-98 analogue on the synthesized videos). */
   private val corrCols = Seq("age_days", "length", "rating", "views",
     "num_ratings", "num_comments", "up_day", "up_month")
+
+  /** The 28 column pairs (a, b), a before b in [[corrCols]]. */
+  private val corrPairs = for {
+    i <- corrCols.indices
+    j <- corrCols.indices if i < j
+  } yield (corrCols(i), corrCols(j))
+
+  /** All 28 Pearson pairs of [[corrCols]] in long form (col_a, col_b,
+    * pearson) from ONE `corr_matrix` aggregate
+    * ([[graft.functions.CorrMatrixAgg]]): 45 accumulator doubles and one
+    * read per column, with co-moments accumulated stably (Welford/Pébay)
+    * and merged map-side. 28 builtin `corr` aggregates would keep 168
+    * slots, and their ~850-expression plan cost up to 17x this one in
+    * driver planning and codegen (VERDICT r2-r3). `+ 0.0` collapses
+    * -0.0 (see f7_zscore's note). */
+  private def corrMatrix(s: SparkSession, d: String): DataFrame = {
+    val aNames = array(corrPairs.map(p => lit(p._1)): _*)
+    val bNames = array(corrPairs.map(p => lit(p._2)): _*)
+    corrInput(s, d)
+      .agg(expr(s"corr_matrix(${corrCols.mkString(", ")})").as("cm"))
+      .select(posexplode(col("cm")).as(Seq("idx", "r")))
+      .select(
+        element_at(aNames, col("idx") + 1).as("col_a"),
+        element_at(bNames, col("idx") + 1).as("col_b"),
+        (round(col("r"), 4) + lit(0.0)).as("pearson"))
+      .orderBy("col_a", "col_b")
+  }
+
+  /** DuckDB oracle of [[corrMatrix]]: one builtin `corr` per pair. */
+  private val corrOracle: String = {
+    val selects = corrPairs.map { case (a, b) =>
+      s"SELECT '$a' AS col_a, '$b' AS col_b, round(corr($a, $b), 4) + 0.0 AS pearson FROM c"
+    }.mkString("\nUNION ALL ")
+    Oracles.withVideos(
+      s""", c AS (
+         |  SELECT CAST(age_days AS DOUBLE) AS age_days,
+         |         CAST(length AS DOUBLE) AS length, rating,
+         |         CAST(views AS DOUBLE) AS views,
+         |         CAST(num_ratings AS DOUBLE) AS num_ratings,
+         |         CAST(num_comments AS DOUBLE) AS num_comments,
+         |         CAST(dayofmonth(upload_date) AS DOUBLE) AS up_day,
+         |         CAST(month(upload_date) AS DOUBLE) AS up_month
+         |  FROM videos)
+         |$selects
+         |ORDER BY col_a, col_b""".stripMargin)
+  }
 
   private def corrInput(s: SparkSession, d: String): DataFrame =
     Tables.videos(s, d).select(
@@ -139,68 +185,9 @@ object Stats {
           |FROM videos JOIN stats USING (category)
           |ORDER BY id""".stripMargin))),
 
-    // ----- F8/J3: 8×8 Pearson correlation matrix composed from built-in
-    // aggs, reshaped to long form (col_a, col_b, corr). NOT 28 `corr`
-    // aggs: each Corr expands to a ~30-expression update over a 6-slot
-    // buffer, and the 28-agg plan (~850 expressions) paid ~1 s of driver
-    // planning + giant-method codegen per run — up to 17x its native twin
-    // (VERDICT r2-r3; chunking the corr aggs did not close the gap, and
-    // neither did a two-pass centered form — the extra means job +
-    // broadcast costs a full stage round-trip). Instead: ONE pass of raw
-    // sufficient statistics — count, 8 sums, 8 sums of squares, 28
-    // cross-products = 45 single-slot `sum` aggs with trivial update
-    // expressions (full codegen) — then
-    //   corr = (n·Σxy − Σx·Σy) / √((n·Σx² − (Σx)²)(n·Σy² − (Σy)²))
-    // in the final 1-row projection. The raw-moment formula is safe HERE
-    // because every input column is null-free and well-conditioned
-    // (stddev is not ≪ mean for any of the 8, so the subtraction loses
-    // ~1e-11 at worst — 6 orders of magnitude inside the round-4
-    // boundary). For hostile inputs use f8_corr_matrix_native below,
-    // whose co-moment accumulation is exact-stable AND single-pass.
-    Q("f8_corr_matrix",
-      (s, d) => {
-        val pairs = for {
-          i <- corrCols.indices
-          j <- corrCols.indices if i < j
-        } yield (corrCols(i), corrCols(j))
-        val aggs: Seq[Column] =
-          Seq(count(lit(1)).cast("double").as("n")) ++
-            corrCols.map(c => sum(col(c)).as(s"sx_$c")) ++
-            corrCols.map(c => sum(col(c) * col(c)).as(s"ss_$c")) ++
-            pairs.map { case (a, b) =>
-              sum(col(a) * col(b)).as(s"sp_${a}__$b")
-            }
-        val wide = corrInput(s, d).agg(aggs.head, aggs.tail: _*)
-        // `+ 0.0` collapses -0.0 (see f7_zscore's note)
-        val stackExpr = pairs.map { case (a, b) =>
-          s"'$a', '$b', round((n * `sp_${a}__$b` - `sx_$a` * `sx_$b`) / " +
-            s"sqrt((n * `ss_$a` - `sx_$a` * `sx_$a`) * " +
-            s"(n * `ss_$b` - `sx_$b` * `sx_$b`)), 4) + 0.0D"
-        }.mkString(s"stack(${pairs.size}, ", ", ",
-          ") as (col_a, col_b, pearson)")
-        wide.selectExpr(stackExpr).orderBy("col_a", "col_b")
-      },
-      Some {
-        val pairs = for {
-          i <- corrCols.indices
-          j <- corrCols.indices if i < j
-        } yield (corrCols(i), corrCols(j))
-        val selects = pairs.map { case (a, b) =>
-          s"SELECT '$a' AS col_a, '$b' AS col_b, round(corr($a, $b), 4) + 0.0 AS pearson FROM c"
-        }.mkString("\nUNION ALL ")
-        Some(Oracles.withVideos(
-          s""", c AS (
-             |  SELECT CAST(age_days AS DOUBLE) AS age_days,
-             |         CAST(length AS DOUBLE) AS length, rating,
-             |         CAST(views AS DOUBLE) AS views,
-             |         CAST(num_ratings AS DOUBLE) AS num_ratings,
-             |         CAST(num_comments AS DOUBLE) AS num_comments,
-             |         CAST(dayofmonth(upload_date) AS DOUBLE) AS up_day,
-             |         CAST(month(upload_date) AS DOUBLE) AS up_month
-             |  FROM videos)
-             |$selects
-             |ORDER BY col_a, col_b""".stripMargin)).get
-      }),
+    // ----- F8/J3: 8×8 Pearson correlation matrix in long form (col_a,
+    // col_b, pearson) — see [[corrMatrix]].
+    Q("f8_corr_matrix", corrMatrix, Some(corrOracle)),
 
     // ----- J5: trending score, exact formula, all features exposed
     Q("j5_trending_score",
@@ -223,48 +210,9 @@ object Stats {
            |  round(trending_score, 4) AS trending_score
            |FROM scored ORDER BY id""".stripMargin))),
 
-    // ----- F8 via the native single-pass TypedImperativeAggregate
-    // (graft.functions.CorrMatrixAgg): 45 accumulator doubles and one
-    // read per column instead of 28 independent corr aggs' 168 slots.
-    // Must hash-match the same oracle as f8_corr_matrix.
-    Q("f8_corr_matrix_native",
-      (s, d) => {
-        val pairs = for {
-          i <- corrCols.indices
-          j <- corrCols.indices if i < j
-        } yield (corrCols(i), corrCols(j))
-        val aNames = array(pairs.map(p => lit(p._1)): _*)
-        val bNames = array(pairs.map(p => lit(p._2)): _*)
-        corrInput(s, d)
-          .agg(expr(s"corr_matrix(${corrCols.mkString(", ")})").as("cm"))
-          .select(posexplode(col("cm")).as(Seq("idx", "r")))
-          .select(
-            element_at(aNames, col("idx") + 1).as("col_a"),
-            element_at(bNames, col("idx") + 1).as("col_b"),
-            (round(col("r"), 4) + lit(0.0)).as("pearson"))
-          .orderBy("col_a", "col_b")
-      },
-      Some {
-        val pairs = for {
-          i <- corrCols.indices
-          j <- corrCols.indices if i < j
-        } yield (corrCols(i), corrCols(j))
-        val selects = pairs.map { case (a, b) =>
-          s"SELECT '$a' AS col_a, '$b' AS col_b, round(corr($a, $b), 4) + 0.0 AS pearson FROM c"
-        }.mkString("\nUNION ALL ")
-        Oracles.withVideos(
-          s""", c AS (
-             |  SELECT CAST(age_days AS DOUBLE) AS age_days,
-             |         CAST(length AS DOUBLE) AS length, rating,
-             |         CAST(views AS DOUBLE) AS views,
-             |         CAST(num_ratings AS DOUBLE) AS num_ratings,
-             |         CAST(num_comments AS DOUBLE) AS num_comments,
-             |         CAST(dayofmonth(upload_date) AS DOUBLE) AS up_day,
-             |         CAST(month(upload_date) AS DOUBLE) AS up_month
-             |  FROM videos)
-             |$selects
-             |ORDER BY col_a, col_b""".stripMargin)
-      }),
+    // ----- F8 under its historical native name: the same plan and the
+    // same oracle as f8_corr_matrix.
+    Q("f8_corr_matrix_native", corrMatrix, Some(corrOracle)),
 
     // ----- I11: fixed-width report table of the top-20 by score
     // (trending_predictor.py:316-324 prints the same printf-style table)

@@ -1547,17 +1547,18 @@ object Text {
           sum(col("x") * col("x")).as("sxx"),
           sum(col("y") * col("y")).as("syy"))
           .select(col("k"),
-            (col("k") * col("sxy") - col("sx") * col("sy")).as("num"),
-            (col("k") * col("sxx") - col("sx") * col("sx")).as("denx"),
-            (col("k") * col("syy") - col("sy") * col("sy")).as("deny"))
-          // num/denx/deny are ~1e13 — exact in BIGINT and in double
-          // (< 2^53); r² as (num/denx)·(num/deny) keeps every
-          // intermediate inside those ranges (num² would overflow
-          // BIGINT, which ANSI mode turns into a runtime error)
-          .select(col("k"),
-            (col("num").cast("double") / col("denx")).as("slope"),
-            ((col("num").cast("double") / col("denx")) *
-              (col("num").cast("double") / col("deny"))).as("r2"))
+            Moments.comoment(col("k"), col("sx"), col("sy"), col("sxy"))
+              .cast("double").as("num"),
+            Moments.comoment(col("k"), col("sx"), col("sx"), col("sxx"))
+              .cast("double").as("denx"),
+            Moments.comoment(col("k"), col("sy"), col("sy"), col("syy"))
+              .cast("double").as("deny"))
+          // num/denx/deny are exact co-moments ~1e13 — exact in double
+          // too (< 2^53); r² as (num/denx)·(num/deny) keeps every
+          // intermediate inside those ranges
+          .select(col("k"), (col("num") / col("denx")).as("slope"),
+            ((col("num") / col("denx")) * (col("num") / col("deny")))
+              .as("r2"))
       },
       Some(
         """WITH counts AS (

@@ -556,8 +556,9 @@ object Windows {
     // aggregate — order-independent — and the Pearson form
     // (n·Σxy − Σx·Σy) / (√(n·Σx²−(Σx)²)·√(n·Σy²−(Σy)²)) is one
     // identically-associated float expression over those exact
-    // integers, rounded 4dp (max |term| ~2e17 — BIGINT-safe, and the
-    // int→double conversions round identically on both engines).
+    // integers ([[Moments.pearson]]), rounded 4dp (max |term| ~2e17,
+    // and the int→double conversions round identically on both
+    // engines).
     // Scale shape: one window shuffle on user_id for the lags, then a
     // groupBy on the SAME key (exchange reuse) with 11 map-side-
     // combinable sum/count slots; no self-join, no driver math.
@@ -584,11 +585,9 @@ object Windows {
           val (n, sx, sy, sxy, sxx, syy) =
             (col(s"n$s0"), col(s"sx$s0"), col(s"sy$s0"),
               col(s"sxy$s0"), col(s"sxx$s0"), col(s"syy$s0"))
-          val dx = n * sxx - sx * sx
-          val dy = n * syy - sy * sy
-          when(n >= lit(2) && dx > 0 && dy > 0,
-            round((n * sxy - sx * sy).cast("double") /
-              (sqrt(dx.cast("double")) * sqrt(dy.cast("double"))), 4))
+          when(n >= lit(2) && Moments.comoment(n, sx, sx, sxx) > 0 &&
+            Moments.comoment(n, sy, sy, syy) > 0,
+            round(Moments.pearson(n, sx, sy, sxy, sxx, syy), 4))
         }
         q.groupBy("user_id")
           .agg(aggs.head, aggs.tail: _*)

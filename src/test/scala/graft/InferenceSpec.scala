@@ -156,6 +156,14 @@ class InferenceSpec extends SparkSpec {
     assert(lam > 0.0, s"scatter matrices are PSD; lambda=$lam")
   }
 
+  test("m_pca_power: the scatter matrix is symmetric, 64 x 64") {
+    val s = ops.Inference.pcaScatter(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDecimal(2)).toMap
+    assert(s.size == 64 * 64)
+    for (((i, j), sij) <- s)
+      assert(sij == s((j, i)), s"S($i, $j) = $sij, S($j, $i) = ${s((j, i))}")
+  }
+
   test("m_ols_multi: residual orthogonality and r2 in range") {
     val fits = SparkEntry.queries("m_ols_multi")(spark, sf).collect()
       .map(r => r.getString(0) ->

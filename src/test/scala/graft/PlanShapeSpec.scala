@@ -116,8 +116,10 @@ class PlanShapeSpec extends SparkSpec {
     // The one-pass Gram build must map-side combine: the exchange key
     // is (i, j) — 4096 cells — so a partial_sum above the join and
     // below the exchange is what keeps the shuffle at cell
-    // cardinality instead of corpus × dim² rows.
-    val df = SparkEntry.queries("m_pca_power")(spark, sf)
+    // cardinality instead of corpus × dim² rows. The query collects
+    // the scatter once and iterates on the driver, so its own plan is
+    // a local relation: the check runs on the scatter build it reads.
+    val df = ops.Inference.pcaScatter(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("partial_sum") || plan.contains("Partial"),
       s"scatter-matrix aggregation lost its map-side combine:\n$plan")

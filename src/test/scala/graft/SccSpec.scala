@@ -1,9 +1,6 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.GraftBus
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -111,25 +108,6 @@ class SccSpec extends SparkSpec {
       assert(keyed(src) == single, s"source $src")
     }
     assert(keyed(3L) == Map(3L -> 0, 0L -> 1, 1L -> 2, 2L -> 2))
-  }
-
-  /** Spark jobs started and codegen classes compiled while `f` runs
-    * (the listener bus is drained before the job count is read). */
-  private def cost(f: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val count = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    GraftBus.drain(sc)
-    sc.addSparkListener(count)
-    try {
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      f
-      GraftBus.drain(sc)
-      (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
-    } finally sc.removeSparkListener(count)
   }
 
   test("frontier and SSSP rounds: one Spark job each, nothing " +

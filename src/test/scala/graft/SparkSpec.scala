@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.GraftBus
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,4 +25,23 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Spark jobs started and codegen classes compiled while `f` runs
+    * (the listener bus is drained before the job count is read). */
+  protected def cost(f: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val count = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    GraftBus.drain(sc)
+    sc.addSparkListener(count)
+    try {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      GraftBus.drain(sc)
+      (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    } finally sc.removeSparkListener(count)
+  }
 }
