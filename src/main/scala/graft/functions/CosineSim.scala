@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
-import graft.plans.{ArtifactRewrite, MvRewrite, TopKPerKeyStrategy}
+import graft.plans.{ArtifactRewrite, LocalFold, MvRewrite,
+  TopKPerKeyStrategy}
 
 /** Native codegen'd cosine similarity over two `array<double>` columns.
   *
@@ -138,9 +139,10 @@ object GraftFunctions {
     // the anchor stage of exact substring dedup (t_dup_substrings).
     "rolling_hashes" -> (e => RollingHashes(e.head, e(1))))
 
-  /** Install every graft function, the three rewrite rules (in the
-    * optimizer's "User Provided Optimizers" batch, after the main
-    * batches) and the [[graft.plans.TopKPerKeyStrategy]] on `spark`.
+  /** Install every graft function, the three rewrite rules and, last,
+    * [[graft.plans.LocalFold]] (in the optimizer's "User Provided
+    * Optimizers" batch, after the main batches), and the
+    * [[graft.plans.TopKPerKeyStrategy]] on `spark`.
     * Idempotent and keyed per session: a session's extension lists are
     * its own, so a `newSession()` child or a session started after
     * `stop()` installs afresh. [[graft.SparkEntry.queries]] calls it
@@ -155,7 +157,7 @@ object GraftFunctions {
             .createOrReplaceTempFunction(name, build, "built-in")
         }
         x.extraOptimizations = x.extraOptimizations ++
-          Seq(RewriteHofDotProduct, MvRewrite, ArtifactRewrite)
+          Seq(RewriteHofDotProduct, MvRewrite, ArtifactRewrite, LocalFold)
         x.extraStrategies = x.extraStrategies :+ TopKPerKeyStrategy
       }
     }

@@ -4,6 +4,7 @@ import graft.Ckpt
 import graft.Ckpt.StageOps
 import graft.{Oracles, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -25,9 +26,11 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Scale design: the vertex-keyed state (the remaining set, the colours,
   * the found sets) lives on the driver, and the edges stay on the
-  * executors, cached by the caller. Both propagations run on [[relax]], one Spark job per
-  * round over the edges out of the vertices whose label changed, so the
-  * loop has no lineage to truncate and never reaches [[graft.Ckpt.stage]].
+  * executors, cached by the caller. Both propagations run on [[relax]],
+  * which plans its edge scan once per call and then runs one plain
+  * Spark job per round over the edges out of the vertices whose label
+  * changed, so the loop has no lineage to truncate, never reaches
+  * [[graft.Ckpt.stage]] and plans no query per round.
   * Final labels are the MIN member id of each component — deterministic
   * and engine-independent (GraphFrames' raw labels are not).
   *
@@ -345,13 +348,15 @@ object Graph {
     *
     * The vertex state lives on the driver as plain collections: the
     * collected seeds, the settled `(keys…, id) -> dist` map and the
-    * current frontier. A round is one Spark job ([[edgesOutOf]]: the
-    * edges out of the frontier's ids, collected); the driver expands
-    * each frontier row over them, drops duplicates and whatever is
-    * already settled. The result is one `LocalRelation`, and every
-    * vertex reached is held on the driver, up to [[driverRowBound]]
-    * rows: callers run it on the capped graph. The loop ends on the first empty frontier or on round
-    * `hops`; `maxIter` is the runaway guard.
+    * current frontier. The edge scan is planned once per call
+    * ([[edgesOutOf]]); a round is one plain Spark job over it that
+    * collects the edges out of the frontier's ids, and the driver
+    * expands each frontier row over them, dropping duplicates and
+    * whatever is already settled. The result is one `LocalRelation`,
+    * and every vertex reached is held on the driver, up to
+    * [[driverRowBound]] rows: callers run it on the capped graph. The
+    * loop ends on the first empty frontier or on round `hops`;
+    * `maxIter` is the runaway guard.
     */
   private[graft] def frontier(edges: DataFrame, seeds: DataFrame,
                               keys: Seq[String] = Nil,
@@ -360,14 +365,14 @@ object Graph {
     val start = seeds.select((keys :+ "id").map(col): _*)
     // positions of the keys the edges carry
     val carried = keys.indices.filter(i => edges.columns.contains(keys(i)))
-    val edgeCols = (carried.map(keys) :+ "src" :+ "dst").map(col)
+    val outOf = edgesOutOf(edges, carried.map(keys) :+ "src" :+ "dst")
     val seeded = start.collect()
       .map(r => (r.toSeq.init.toList, r.getLong(keys.size))).distinct.toList
     val (settled, _) = Ckpt.fixpoint("frontier expansion", maxIter)(
       ((seeded.map(_ -> 0).toMap, seeded), seeded.isEmpty || hops <= 0)) {
       case ((settled, front), i) =>
         // (carried key values, src) -> dsts
-        val out = edgesOutOf(edges, front.map(_._2), edgeCols).groupMap(r =>
+        val out = outOf(front.map(_._2)).groupMap(r =>
           (r.toSeq.dropRight(2).toList, r.getLong(carried.size)))(
           _.getLong(carried.size + 1))
         val fresh = front.flatMap { case (k, v) =>
@@ -386,8 +391,9 @@ object Graph {
 
   /** Label-correcting propagation over a directed `(src, dst)` edge
     * list: the one loop [[sssp]] and both [[scc]] phases run on. The
-    * labels live on the driver in a `Map`, seeded with `start`. A round
-    * is one Spark job ([[edgesOutOf]]) over the edges out of the
+    * labels live on the driver in a `Map`, seeded with `start`. The
+    * edge scan is planned once per call ([[edgesOutOf]]), and a round
+    * is one plain Spark job over it that collects the edges out of the
     * vertices whose label changed in the previous round (all of `start`
     * in round 1). Each such edge `offer`s its `dst` a label, computed
     * from its `src`'s label and the edge row (`src`, `dst`, then the
@@ -400,10 +406,10 @@ object Graph {
                     maxIter: Long, extra: Seq[String] = Nil)(
       offer: (Long, Row) => Long, better: (Long, Long) => Boolean,
       admit: (Long, Long) => Boolean): Map[Long, Long] = {
-    val cols = ("src" +: "dst" +: extra).map(col)
+    val outOf = edgesOutOf(edges, "src" +: "dst" +: extra)
     val (labels, _) = Ckpt.fixpoint(loop, maxIter)(
       ((start, start), start.isEmpty)) { case ((labels, changed), _) =>
-      val offers = edgesOutOf(edges, changed.keys, cols)
+      val offers = outOf(changed.keys)
         .map(r => r.getLong(1) -> offer(changed(r.getLong(0)), r))
         .filter { case (v, l) => admit(v, l) }
         .groupMapReduce(_._1)(_._2)((a, b) => if (better(b, a)) b else a)
@@ -433,20 +439,27 @@ object Graph {
       s"$loop holds $rows rows on the driver, over the bound of " +
         s"$driverRowBound")
 
-  /** A frontier or relaxation round's one Spark job: the `cols` of
-    * every edge whose `src` is among `ids`, collected to the driver. The
-    * ids ride in the task closure (a sorted array read by a udf), so the
-    * round runs no exchange and no broadcast job, and every round has
-    * the same plan shape: no class is compiled after the first (an
-    * `isin` list of ten or fewer literals is compiled into the generated
-    * code).
+  /** The edge scan of a frontier or relaxation loop, planned once: the
+    * `cols` of `edges` as the RDD of their executed plan, and the round
+    * function over it, which collects the `cols` of every edge whose
+    * `src` is among `ids` (a null `src` is among none). A round is then
+    * one plain Spark job: no SQL execution, no planning, no exchange
+    * and no broadcast job. The ids ride in the task closure as a sorted
+    * array. The plan's `toRdd`, not `Dataset.rdd`: Spark 4.1 runs the
+    * latter as an SQL execution.
     */
-  private def edgesOutOf(edges: DataFrame, ids: Iterable[Long],
-                         cols: Seq[Column]): Array[Row] = {
-    val sorted = ids.toArray.distinct.sorted
-    val from =
-      udf((v: Long) => java.util.Arrays.binarySearch(sorted, v) >= 0)
-    edges.filter(from(col("src"))).select(cols: _*).collect()
+  private def edgesOutOf(edges: DataFrame,
+                         cols: Seq[String]): Iterable[Long] => Array[Row] = {
+    val scan = edges.select(cols.map(col): _*)
+    val rows = scan.queryExecution.toRdd
+    val toRow = CatalystTypeConverters.createToScalaConverter(scan.schema)
+    val src = cols.indexOf("src")
+    ids => {
+      val sorted = ids.toArray.distinct.sorted
+      rows.filter(r => !r.isNullAt(src) &&
+          java.util.Arrays.binarySearch(sorted, r.getLong(src)) >= 0)
+        .map(toRow(_).asInstanceOf[Row]).collect()
+    }
   }
 
   /** HITS on the driver over a directed `(src, dst)` edge list,
@@ -792,9 +805,10 @@ object Graph {
     * distribute; frontier Bellman-Ford is the standard Spark/Pregel
     * form (delta-stepping reduces rounds further but needs bucketed
     * priorities — unnecessary at these depths). It runs on [[relax]]:
-    * the distance map is a driver collection, a round is one Spark job,
-    * and each vertex keeps its minimum relaxation when that improves
-    * strictly. Returns ("id", "dist") as one `LocalRelation`.
+    * the distance map is a driver collection, a round is one plain Spark
+    * job over an edge scan planned once per call, and each vertex
+    * keeps its minimum relaxation when that improves strictly.
+    * Returns ("id", "dist") as one `LocalRelation`.
     */
   def sssp(s: SparkSession, edges: DataFrame, source: Long,
            maxIter: Int = 40): DataFrame = {
@@ -803,6 +817,16 @@ object Graph {
       (d, e) => d + e.getLong(2), _ < _, (_, _) => true)
       .toSeq.toDF("id", "dist")
   }
+
+  /** The least `src` of `edges`, the source k5 and k10 search from:
+    * one top-1 job over the edges sorted ascending, nulls last (a
+    * global `min` splits into a shuffle-map job and a result job).
+    * Throws, naming `query`, when there is no edge to start from. */
+  private def minSrc(edges: DataFrame, query: String): Long =
+    edges.select(col("src")).orderBy(col("src").asc_nulls_last).limit(1)
+      .collect().headOption.filterNot(_.isNullAt(0)).map(_.getLong(0))
+      .getOrElse(throw new IllegalStateException(
+        s"$query: no edge to take the source from"))
 
   /** k9/k10 share the sparser "first lineitem per order" co-purchase
     * graph: `l_linenumber = 1` thins the video graph to 132 components
@@ -1195,17 +1219,17 @@ object Graph {
     // the graph is capped; BFS is the form that scales — Pregel's
     // canonical example). First discovery IS the minimum distance, so
     // no per-node min is ever recomputed. Ten rounds max (the
-    // reference's maxIter, graph_filter.py:129), each one Spark job
-    // over the cached edges with the settled set and the frontier
-    // held on the driver ([[frontier]]); the source is the minimum src
-    // id, derived from the data (1-row control-plane aggregate).
+    // reference's maxIter, graph_filter.py:129), each one plain Spark
+    // job over an edge scan planned once per loop, with the settled set
+    // and the frontier held on the driver ([[frontier]]); the source is
+    // the minimum src id, derived from the data ([[minSrc]]), and the
+    // final sort runs on the driver (`LocalFold`).
     // Oracle: recursive CTE whose UNION dedups
     // (id, dist) pairs per level, then min per node.
     Q("k5_bfs",
       (s, d) => {
         val edges = cappedDistinctBySrc(s, d)
-        val src = edges.agg(min(col("src"))).head().getLong(0)
-        bfs(s, edges, src).orderBy("id")
+        bfs(s, edges, minSrc(edges, "k5_bfs")).orderBy("id")
       },
       Some(
         s"""WITH RECURSIVE edges AS (
@@ -1576,12 +1600,11 @@ object Graph {
     // the capped directed graph with a deterministic per-edge weight
     // (1 + min(l_suppkey % 5) over the edge's duplicate rows — min, so
     // any subset of lineitem rows reproduces it). Source = min src id,
-    // derived from the data (1-row control-plane aggregate, the k5
-    // convention). Oracle: recursive path closure pruned at dist 30 —
-    // a valid bound because the measured eccentricity at the oracle
-    // scale is 22 and every shortest path itself stays under the
-    // bound; min(dist) per vertex over the bounded closure is then
-    // exactly the shortest distance.
+    // derived from the data ([[minSrc]], the k5 convention). Oracle:
+    // recursive path closure pruned at dist 30 — a valid bound because
+    // the measured eccentricity at the oracle scale is 22 and every
+    // shortest path itself stays under the bound; min(dist) per vertex
+    // over the bounded closure is then exactly the shortest distance.
     Q("k10_sssp",
       (s, d) => {
         val edges = cachedBySrc(s, d, "ssspEdgesBySrc") {
@@ -1590,8 +1613,7 @@ object Graph {
             .groupBy(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
             .agg((lit(1) + min(col("l_suppkey") % 5)).as("w"))
         }
-        val source = edges.agg(min(col("src"))).head().getLong(0)
-        sssp(s, edges, source)
+        sssp(s, edges, minSrc(edges, "k10_sssp"))
           .select(col("id"), col("dist").cast("int").as("dist"))
           .orderBy("id")
       },
@@ -1767,11 +1789,12 @@ object Graph {
     // mass for the top-5 out-degree hubs, via ONE batched BFS whose
     // state is (source, node, dist) — k sources traverse together in
     // one loop instead of k separate loops, so each round's one job
-    // over the cached edge table is paid once for the whole seed set
+    // over the edge scan is paid once for the whole seed set
     // (the way production scores a seed set's centrality; k5_bfs is
     // the single-source special case) — [[frontier]] keyed by
     // `source`, seeded by the hub frame itself, with the oracle's
-    // 40-hop horizon.
+    // 40-hop horizon. The per-source tail (count, sum, sort) runs on
+    // the driver over the loop's `LocalRelation` (`LocalFold`).
     // Output stays integral (reach count + distance sum) — the
     // closeness RATIO is a trivial client-side division, and emitting
     // the integers keeps the oracle float-free.

@@ -70,14 +70,15 @@ class SccSpec extends SparkSpec {
 
   test("BFS: path, branch, cycle, and unreachable node distances") {
     import spark.implicits._
-    // 0→1→2→3 path with a shortcut 0→2, a cycle back-edge 3→0, and an
-    // island 9→10 unreachable from 0
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 2L), (3L, 0L),
-      (9L, 10L)).toDF("src", "dst")
+    // 0→1→2→3 path with a shortcut 0→2, a cycle back-edge 3→0, an
+    // island 9→10 unreachable from 0, and an edge with no src into 11
+    val edges = Seq((Some(0L), 1L), (Some(1L), 2L), (Some(2L), 3L),
+      (Some(0L), 2L), (Some(3L), 0L), (Some(9L), 10L), (None, 11L))
+      .toDF("src", "dst")
     val got = ops.Graph.bfs(spark, edges, 0L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // shortcut wins (2 at dist 1, not 2); cycle doesn't relabel 0;
-    // island absent
+    // island and 11 absent
     assert(got == Map(0L -> 0, 1L -> 1, 2L -> 1, 3L -> 2))
   }
 
@@ -132,20 +133,28 @@ class SccSpec extends SparkSpec {
     // once: colours change {0}, then {1}, then nothing; the backward
     // search from the roots {2, 3} admits {1}, then {0}, then nothing;
     // one more job collects the vertex ids
-    val loops = Seq[(String, Int, () => Unit)](
-      ("bfs", 3, () => Graph.bfs(spark, edges, 0L).collect()),
+    val loops = Seq[(String, Int, () => DataFrame)](
+      ("bfs", 3, () => Graph.bfs(spark, edges, 0L)),
       ("keyed frontier", 3, () => Graph.frontier(edges,
-        Seq((0L, 0L), (3L, 3L)).toDF("source", "id"), Seq("source"))
-        .collect()),
-      ("sssp", 3, () => Graph.sssp(spark, weighted, 0L).collect()),
-      ("scc", 3 + 3 + 1, () => Graph.scc(spark, verts, cycleTail)
-        .collect()))
-    try for ((name, want, run) <- loops) {
-      val (jobs, _) = cost(run())
-      assert(jobs == want, s"$name: $jobs jobs, want $want")
-      val (again, compiled) = cost(run())
-      assert(again == want, s"$name repeated: $again jobs, want $want")
-      assert(compiled == 0, s"$name repeated: $compiled classes compiled")
+        Seq((0L, 0L), (3L, 3L)).toDF("source", "id"), Seq("source"))),
+      ("sssp", 3, () => Graph.sssp(spark, weighted, 0L)),
+      ("scc", 3 + 3 + 1, () => Graph.scc(spark, verts, cycleTail)))
+    try {
+      for ((name, want, loop) <- loops) {
+        val (jobs, _) = cost(loop().collect())
+        assert(jobs == want, s"$name: $jobs jobs, want $want")
+        val (again, compiled) = cost(loop().collect())
+        assert(again == want, s"$name repeated: $again jobs, want $want")
+        assert(compiled == 0, s"$name repeated: $compiled classes compiled")
+        // the rounds run on a scan planned once: at most the seed or
+        // vertex collect is a planned query
+        val (_, sqls, _) = counts(loop())
+        assert(sqls <= 1, s"$name: $sqls SQL executions, want at most 1")
+      }
+      // the sort of the loop's driver-held result runs no job
+      val (sorted, _) = cost(Graph.bfs(spark, edges, 0L).orderBy("id")
+        .collect())
+      assert(sorted == 3, s"sorted bfs: $sorted jobs, want the 3 rounds")
     } finally Seq(edges, weighted, cycleTail, verts).foreach(_.unpersist())
   }
 
